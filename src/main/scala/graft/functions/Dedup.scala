@@ -238,10 +238,6 @@ object Dedup {
     agg.select(col(idCol), sig.as("simhash"))
   }
 
-  /** Hamming distance between two simhash64 values (bit_count of xor). */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** SimHash on the PORTABLE md5 hash family (60 bits — the md5Hash64
     * range): per bit, majority vote over all token occurrences. Same
     * explode+aggregate shape as simhash64, but reproducible in any engine

@@ -37,11 +37,6 @@ object TextAnalysis {
       .otherwise(floor(alphaCount(text) * lit(10000.0) / length(text)))
       .cast("long")
 
-  /** Simple length+composition quality gate (C4/Gopher-style heuristics:
-    * minimum length, mostly-alphabetic). */
-  def isQuality(text: Column, minLen: Int = 50, minAlphaBp: Int = 5000): Column =
-    length(text) >= minLen && alphaRatioBp(text) >= minAlphaBp
-
   /** Occurrences of `word` as a standalone token, replace-diff counted
     * (non-overlapping, consistent across engines). Text is lowercased and
     * space-padded first. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.{Dedup, Graph, Hnsw, Layout, Mixing, NaiveBayes, Pii, Projection, Retrieval, Similarity, Sketches, TextAnalysis}
 import graft.sources.{Tables, VersionedTable}
+import graft.streaming.VersionedState
 import ParityQueries.Q
 import ExtensionShared._
 
@@ -61,7 +62,7 @@ object StreamedQueries {
             ev.filter(col("event_id") % 3 === b), b, stateDir,
             "value", binWidth = 10.0)
         }
-        graft.streaming.MonitorStreams.latestState(s, stateDir)
+        s.read.parquet(VersionedState.latest(s, stateDir))
           .orderBy("bin")
       },
       Some("""SELECT CAST(floor(value / 10.0) AS BIGINT) AS bin,
@@ -217,8 +218,8 @@ object StreamedQueries {
     // distinct — the q119 contract), each delivered through degreeBatch
     // (the exact foreachBatch body: _SUCCESS-gated predecessor read,
     // mergeDegrees count addition, overwrite v=N), end state read back
-    // through latestState. History is never re-aggregated; state in the
-    // bounded per-(application, dir) tmpdir.
+    // through VersionedState.latest. History is never re-aggregated;
+    // state in the bounded per-(application, dir) tmpdir.
 
     Q("q236_streamed_degrees",
       (s, dir) => {
@@ -236,7 +237,7 @@ object StreamedQueries {
           graft.streaming.GraphStreams.degreeBatch(
             base.filter(wave === b).distinct(), b, stateDir)
         }
-        graft.streaming.GraphStreams.latestState(s, stateDir)
+        s.read.parquet(VersionedState.latest(s, stateDir))
           .orderBy("id")
       },
       Some("""WITH e AS (
@@ -275,7 +276,7 @@ object StreamedQueries {
             train.filter(col("doc_id") % 3 === b), b, stateDir)
         }
         NaiveBayes.model(
-            graft.streaming.IndexStreams.latestNbCounts(s, stateDir))
+            s.read.parquet(VersionedState.latest(s, stateDir)))
           .orderBy("label", "term")
       },
       Some(nbModelCtes +
@@ -302,7 +303,7 @@ object StreamedQueries {
             maxPostings = 32)
         }
         val latest =
-          graft.streaming.IndexStreams.latestIndex(s, stateDir)
+          s.read.parquet(VersionedState.latest(s, stateDir))
         Retrieval.mergeIndexes(latest, latest.limit(0), 32)
           .orderBy("term")
       },
@@ -343,7 +344,7 @@ object StreamedQueries {
             docs.filter(col("doc_id") % 3 === b), b, stateDir)
         }
         graft.functions.Bpe.trainFromWords(
-            graft.streaming.IndexStreams.latestWordTable(s, stateDir),
+            s.read.parquet(VersionedState.latest(s, stateDir)),
             rounds = 6)
           ._2.orderBy("round")
       },
@@ -378,7 +379,7 @@ object StreamedQueries {
           graft.streaming.DimensionStreams.upsertBatch(w, i.toLong,
             stateDir)
         }
-        graft.streaming.DimensionStreams.latestDim(s, stateDir)
+        s.read.parquet(VersionedState.latest(s, stateDir))
           .orderBy("customer_id", "valid_from", "change_key")
       },
       Some("""WITH ch AS (
@@ -633,7 +634,7 @@ object StreamedQueries {
     // hhBatch (mergeable Misra-Gries) certified in the EXACT regime
     // (k=16 ≥ the per-day event-type domain, the q113 contract: below
     // capacity MG degenerates to exact counts and the merge is exact
-    // count addition): three event-mod waves → latestState ≡ the plain
+    // count addition): three event-mod waves → the latest state ≡ the plain
     // per-(day, type) count — q113's oracle verbatim. Above capacity
     // the PODS-2012 merge bound takes over (spec-gated, as for q106).
 
@@ -648,7 +649,7 @@ object StreamedQueries {
             ev.filter(col("event_id") % 3 === b), b, stateDir,
             k = 16, "day", "event_type")
         }
-        graft.streaming.SketchStreams.latestState(s, stateDir)
+        s.read.parquet(VersionedState.latest(s, stateDir))
           .select(col("day"), col("item").as("event_type"), col("cnt"))
           .orderBy(col("day"), desc("cnt"), col("event_type"))
       },
@@ -660,7 +661,7 @@ object StreamedQueries {
     // The STREAMED Count-Min sketch's end state — SketchStreams'
     // cmBatch certified end-to-end: the CM state is EXACT deterministic
     // cell counts (merge = addition), so three lineitem waves →
-    // latestState probed at the q124 operating point yields estimates,
+    // the latest state probed at the q124 operating point yields estimates,
     // exact counts and guaranteed overcounts that hash-match q124's
     // one-shot oracle verbatim.
 
@@ -673,7 +674,7 @@ object StreamedQueries {
             li.filter(col("l_orderkey") % 3 === b), b, stateDir,
             "l_partkey", width = 256, depth = 3)
         }
-        val cm = graft.streaming.SketchStreams.latestState(s, stateDir)
+        val cm = s.read.parquet(VersionedState.latest(s, stateDir))
         val probes = li.filter(col("l_partkey") <= 20)
         val exact = probes
           .groupBy(col("l_partkey").cast("string").as("item"))

@@ -631,9 +631,10 @@ object TextReportQueries {
     // (event_id mod 3) delivered through binBatch (the exact
     // foreachBatch body the maintainer runs: predecessor read gated on
     // _SUCCESS, additive bin fold, overwrite v=N) and the final state
-    // read back through latestState. The oracle is the ONE-SHOT bin
-    // count over all events (the q121 bin formula), so streamed-final ≡
-    // rebuilt is hash-certified no matter how the stream batched.
+    // read back through VersionedState.latest. The oracle is the
+    // ONE-SHOT bin count over all events (the q121 bin formula), so
+    // streamed-final ≡ rebuilt is hash-certified no matter how the
+    // stream batched.
     // State lives in the bounded per-(application, dir) tmpdir (the
     // q214 convention) so re-invocations converge on one tree.
 

@@ -31,10 +31,6 @@ object Sinks {
     df.sparkSession.catalog.refreshByPath(path)
   }
 
-  /** S5 — headered CSV staging copy (hdfs_upload_data_dag.py:122-151). */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.option("header", "true").mode(SaveMode.Overwrite).csv(path)
-
   /** Bucketed managed table: co-locates rows by join key so repeated
     * fact⋈fact joins on `bucketCols` need NO shuffle on either side
     * (Exchange-free sort-merge join; see SinksSpec plan assertion). The

@@ -150,18 +150,6 @@ object Tables {
     }
   }
 
-  /** Register every test table as a temp view (for spark.sql entry points). */
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
-  /** Partitioned-parquet source, the Spark analogue of the reference's
-    * external Hive tables (trino_init_tables_dag.py:38-67): Hive-style
-    * `<col>=<value>` directories are discovered automatically and pruned by
-    * Catalyst when the partition column is filtered (SURVEY.md §4).
-    */
-  def partitionedParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("basePath", path).parquet(path)
-
   /** S2 — JDBC source, the analogue of the reference's Postgres federation
     * (docker/trino-conf/catalog/postgres.properties; ddl_postgres.sql). In
     * one SparkSession the "federation" is just another DataFrame; this

@@ -271,21 +271,6 @@ object VersionedTable {
     }
   }
 
-  /** foreachBatch sink: every micro-batch lands as its own exactly-once
-    * append commit (version = batchId). Restart/replay adds nothing —
-    * the claimed version makes the replay a no-op. */
-  def sink(docs: DataFrame, dir: String, checkpoint: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          appendAt(batch.toDF(), dir, batchId): Unit
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
   /** Content diff between two snapshots: per-id
     * added/removed/modified/unchanged by md5 fingerprint
     * (graft.functions.Dedup.snapshotDiff — one narrow full-outer join;
@@ -426,12 +411,6 @@ object VersionedTable {
           .otherwise(col(c)).as(c)): _*)
       .select(target.columns.map(col): _*)
   }
-
-  /** Batch ids already recorded in the commit log (one log read per
-    * call — the log is one tiny JSON per commit). */
-  def committedBatchIds(spark: SparkSession, dir: String): Set[Long] =
-    versions(spark, dir)
-      .flatMap(v => readCommit(spark, dir, v).batchId).toSet
 
   /** [[merge]] as an EXACTLY-ONCE streaming landing: the commit record
     * carries the micro-batch id, and a replayed batch (same `batchId` —

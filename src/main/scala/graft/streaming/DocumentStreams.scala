@@ -123,47 +123,4 @@ object DocumentStreams {
       .write.mode("overwrite")
       .parquet(s"$curatedPath/batch_id=$batchId")
   }
-
-  /** Start the streaming curation ingest: every micro-batch lands its
-    * curated survivors under `curatedPath/batch_id=N` and grows the
-    * standing near-dup index. Pass a durable `checkpoint` for
-    * restart. */
-  def ingestCurated(docs: DataFrame, evalDocs: DataFrame,
-                    indexDir: String, pairsPath: String,
-                    curatedPath: String, checkpoint: String,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    shingleN: Int = 3, bands: Int = 4,
-                    rowsPerBand: Int = 4, minJaccardBp: Long = 5000):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          curateBatch(batch.toDF(), batchId, evalDocs, indexDir,
-            pairsPath, curatedPath, idCol, textCol, shingleN, bands,
-            rowsPerBand, minJaccardBp)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** Start the streaming ingest: every micro-batch of `docs` probes and
-    * then grows the standing index at `indexDir`, landing duplicate
-    * pairs under `outPath`. Pass a durable `checkpoint` for restart. */
-  def ingestNearDups(docs: DataFrame, indexDir: String, outPath: String,
-                     checkpoint: String,
-                     idCol: String = "doc_id", textCol: String = "text",
-                     shingleN: Int = 3, bands: Int = 4,
-                     rowsPerBand: Int = 4, minJaccardBp: Long = 5000):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          nearDupBatch(batch.toDF(), batchId, indexDir, outPath, idCol,
-            textCol, shingleN, bands, rowsPerBand, minJaccardBp)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 }

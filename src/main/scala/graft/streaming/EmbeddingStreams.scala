@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Similarity
 
 /** Streaming ANN ingestion: the embeddings-side twin of
-  * DocumentStreams.ingestNearDups — exactly-once micro-batch landing
+  * DocumentStreams.nearDupBatch — exactly-once micro-batch landing
   * composed with the standing-quantizer assignment
   * (Similarity.incrementalAssign). Each micro-batch:
   *
@@ -33,13 +33,11 @@ object EmbeddingStreams {
     val spark = batch.sparkSession
     val vecs = batch.select(col("vec_id"), col("embedding"))
     val centPath = s"$indexDir/centroids"
-    val p = new org.apache.hadoop.fs.Path(centPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // gate on the committer's _SUCCESS marker, not the bare directory: a
     // crash mid-write leaves a partial directory that would pass a
     // directory-exists check on replay and feed a corrupt or empty
     // quantizer; an uncommitted directory retrains (overwrite converges)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+    if (!VersionedState.committed(spark, centPath))
       Similarity.centroids(vecs, k, lloydIters)
         .write.mode("overwrite").parquet(centPath)
     val cents = spark.read.parquet(centPath)
@@ -53,23 +51,6 @@ object EmbeddingStreams {
     Similarity.incrementalAssign(cents, vecs)
       .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
   }
-
-  /** Start the streaming assignment ingest. Pass a durable `checkpoint`
-    * for restart. */
-  def ingestAssignments(vecs: DataFrame, indexDir: String, outPath: String,
-                        checkpoint: String, k: Int = 8,
-                        lloydIters: Int = 1):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          assignBatch(batch.toDF(), batchId, indexDir, outPath, k,
-            lloydIters)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   // -----------------------------------------------------------------
   // Streaming PQ encoding — the compressed-index member of the
@@ -91,11 +72,9 @@ object EmbeddingStreams {
     val spark = batch.sparkSession
     val vecs = batch.select(col("vec_id"), col("embedding"))
     val cbPath = s"$indexDir/pq_codebook"
-    val p = new org.apache.hadoop.fs.Path(cbPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // _SUCCESS-gated bootstrap, the assignBatch discipline: an
     // uncommitted directory retrains rather than reading partial bytes
-    if (!fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+    if (!VersionedState.committed(spark, cbPath))
       graft.functions.Pq.codebook(vecs, nsub, k, dsub)
         .write.mode("overwrite").parquet(cbPath)
     val cb = spark.read.parquet(cbPath)
@@ -107,23 +86,6 @@ object EmbeddingStreams {
       .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
   }
 
-  /** Start the streaming PQ encoder. Pass a durable `checkpoint` for
-    * restart. */
-  def ingestPqCodes(vecs: DataFrame, indexDir: String, outPath: String,
-                    checkpoint: String, nsub: Int = 8, k: Int = 16,
-                    dsub: Int = 8):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          pqEncodeBatch(batch.toDF(), batchId, indexDir, outPath, nsub,
-            k, dsub)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
   // -----------------------------------------------------------------
   // Streaming HNSW maintenance — the graph-index member of the
   // versioned standing-artifact family (index/dimension/sketch/degree/
@@ -133,14 +95,12 @@ object EmbeddingStreams {
   // replays the one-shot build exactly (HnswSpec), EVERY committed
   // version equals a from-scratch index over everything streamed so
   // far — and crash replay of batch N re-reads committed v=N−1 and
-  // rewrites the same v=N bytes (the DimensionStreams recipe).
+  // rewrites the same v=N bytes (the [[VersionedState]] contract).
   //
   // Contract inherited from insertIncremental: batches arrive with
   // ascending vec_ids (append-only ingestion, the log-structured id
   // discipline); a violation fails the batch loudly inside the task.
   // -----------------------------------------------------------------
-
-  private def hnswVersion(stateDir: String, v: Long) = s"$stateDir/v=$v"
 
   /** One micro-batch of the HNSW fold (public so tests and any
     * foreachBatch caller run the exact same code path). */
@@ -149,35 +109,17 @@ object EmbeddingStreams {
     val spark = batch.sparkSession
     import spark.implicits._
     val vecs = batch.select(col("vec_id"), col("embedding"))
-    val prev = new org.apache.hadoop.fs.Path(hnswVersion(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
+    val next = VersionedState.prior(spark, stateDir, batchId) match {
+      case Some(prev) =>
         graft.functions.Hnsw.insertIncremental(
-          spark.read.parquet(hnswVersion(stateDir, batchId - 1))
-            .as[graft.functions.HnswNode],
+          spark.read.parquet(prev).as[graft.functions.HnswNode],
           vecs, nShards, m, efConstruction)
-      else // bootstrap: the first committed batch IS the initial index
+      case None => // bootstrap: the first committed batch IS the index
         graft.functions.Hnsw.buildIndex(vecs, nShards, m, efConstruction)
-    next.write.mode("overwrite").parquet(hnswVersion(stateDir, batchId))
+    }
+    next.write.mode("overwrite").parquet(
+      VersionedState.path(stateDir, batchId))
   }
-
-  /** Start the streaming HNSW maintainer. Pass a durable `checkpoint`
-    * for restart. */
-  def ingestHnsw(vecs: DataFrame, stateDir: String, checkpoint: String,
-                 nShards: Int = 4, m: Int = 8, efConstruction: Int = 64):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          hnswBatch(batch.toDF(), batchId, stateDir, nShards, m,
-            efConstruction)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** The latest committed HNSW index under `stateDir`, typed for
     * Hnsw.searchIndex / further insertIncremental calls. */
@@ -185,12 +127,7 @@ object EmbeddingStreams {
                       stateDir: String):
       org.apache.spark.sql.Dataset[graft.functions.HnswNode] = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed HNSW versions under $stateDir")
-    spark.read.parquet(hnswVersion(stateDir, vs.max))
+    spark.read.parquet(VersionedState.latest(spark, stateDir))
       .as[graft.functions.HnswNode]
   }
 }

@@ -182,22 +182,6 @@ object EventStreams {
     events.join(org.apache.spark.sql.functions.broadcast(dim), Seq(key),
       "left")
 
-  /** Streaming ingestion into the partitioned warehouse: each micro-batch
-    * lands via the idempotent partitioned-parquet sink (dynamic partition
-    * overwrite is per-batch append here — `foreachBatch` gives the batch
-    * writer full sink flexibility). Returns the started query. */
-  def ingestToWarehouse(events: DataFrame, path: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    events
-      .withColumn("event_date",
-        org.apache.spark.sql.functions.to_date(col("ts")))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write.mode("append").partitionBy("event_date").parquet(path)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
   /** Idempotent per-batch write for exactly-once file ingestion: every
     * micro-batch lands in its own `batch_id=<n>` partition directory,
     * OVERWRITTEN on replay — a batch retried after a crash between write
@@ -215,21 +199,6 @@ object EventStreams {
       .write.mode("overwrite")
       .partitionBy("event_date")
       .parquet(s"$path/batch_id=$batchId")
-
-  /** Exactly-once streaming ingestion (contrast ingestToWarehouse's plain
-    * append): each micro-batch goes through idempotentBatchWrite. Pass a
-    * durable `checkpoint` for restartability. */
-  def ingestExactlyOnce(events: DataFrame, path: String,
-                        checkpoint: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) => idempotentBatchWrite(batch.toDF(), batchId, path)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** Run a streaming frame to completion against a bounded source and
     * return the materialized result (memory sink; for tests/smoke). */

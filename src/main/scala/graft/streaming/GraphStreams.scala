@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.functions.Graph
 
@@ -19,53 +19,14 @@ import graft.functions.Graph
   * double-counts exactly as it would in a batch rebuild over the
   * concatenated pair lists.
   *
-  * Exactly-once: the DimensionStreams recipe verbatim — batch N reads
-  * committed v=N−1 (gated on `_SUCCESS`), overwrites v=N; replay folds
-  * into the same predecessor state and rewrites the same bytes.
+  * Exactly-once: the [[VersionedState]] fold.
   */
 object GraphStreams {
-
-  private def versionPath(stateDir: String, v: Long) = s"$stateDir/v=$v"
 
   /** One micro-batch of the degree merge (public so tests and any
     * foreachBatch caller run the exact same code path). */
   def degreeBatch(batch: DataFrame, batchId: Long,
-                  stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else Graph.degrees(batch).limit(0)
-    Graph.mergeDegrees(standing, batch)
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
-  }
-
-  /** Start the streaming degree maintainer over a canonical-edge stream
-    * with `id_a`/`id_b` columns. Pass a durable `checkpoint` for
-    * restart. */
-  def ingestDegrees(edges: DataFrame, stateDir: String,
-                    checkpoint: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          degreeBatch(batch.toDF(), batchId, stateDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** The latest committed degree table under `stateDir`. */
-  def latestState(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed degree versions under $stateDir")
-    spark.read.parquet(versionPath(stateDir, vs.max))
-  }
+                  stateDir: String): Unit =
+    VersionedState.fold(stateDir, batchId, Graph.degrees(batch).limit(0))(
+      Graph.mergeDegrees(_, batch))
 }

@@ -14,64 +14,22 @@ import graft.functions.Retrieval
   * merge on the k-min semilattice, the historical corpus is never
   * re-tokenized (the join is vocabulary-sized).
   *
-  * Exactly-once recipe: the DimensionStreams versioned-artifact pattern —
-  * batch N reads committed v=N−1 (gated on its `_SUCCESS` marker) and
-  * overwrites v=N; a replayed batch folds into exactly the state its
-  * first attempt saw and rewrites the same bytes (the merge is
-  * deterministic). Contract: batches partition the corpus (each doc id
-  * arrives exactly once across the stream) — df/total_tf add only for
-  * disjoint doc sets, the same contract as batch q92.
+  * Exactly-once: the [[VersionedState]] fold, for every maintainer here.
+  * Contract: batches partition the corpus (each doc id arrives exactly
+  * once across the stream) — df/total_tf add only for disjoint doc
+  * sets, the same contract as batch q92.
   */
 object IndexStreams {
-
-  private def versionPath(indexDir: String, v: Long) = s"$indexDir/v=$v"
 
   /** One micro-batch of the streaming index merge (public so tests and
     * any foreachBatch caller run the exact same code path). */
   def indexBatch(batch: DataFrame, batchId: Long, indexDir: String,
                  maxPostings: Int, idCol: String = "doc_id",
                  textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
     val batchIx = Retrieval.invertedIndexArr(batch, maxPostings, idCol,
       textCol)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(indexDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(indexDir, batchId - 1))
-      else batchIx.limit(0) // bootstrap: empty standing index
-    Retrieval.mergeIndexesArr(standing, batchIx, maxPostings)
-      .write.mode("overwrite").parquet(versionPath(indexDir, batchId))
-  }
-
-  /** Start the streaming index maintainer. Pass a durable `checkpoint`
-    * for restart. */
-  def ingestIndexed(docs: DataFrame, indexDir: String, checkpoint: String,
-                    maxPostings: Int, idCol: String = "doc_id",
-                    textCol: String = "text"):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          indexBatch(batch.toDF(), batchId, indexDir, maxPostings, idCol,
-            textCol)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** The latest committed index version under `indexDir` (arr form —
-    * pass through Retrieval.mergeIndexes/renderPostings for the csv
-    * read-side shape). */
-  def latestIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed index versions under $indexDir")
-    spark.read.parquet(versionPath(indexDir, vs.max))
+    VersionedState.fold(indexDir, batchId, batchIx.limit(0))(
+      Retrieval.mergeIndexesArr(_, batchIx, maxPostings))
   }
 
   // -----------------------------------------------------------------
@@ -90,33 +48,10 @@ object IndexStreams {
     * foreachBatch caller run the exact same code path). */
   def bpeBatch(batch: DataFrame, batchId: Long, stateDir: String,
                textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
     val batchWords = graft.functions.Bpe.wordTable(batch, textCol)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchWords.limit(0)
-    graft.functions.Bpe.mergeWordTables(standing, batchWords)
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
+    VersionedState.fold(stateDir, batchId, batchWords.limit(0))(
+      graft.functions.Bpe.mergeWordTables(_, batchWords))
   }
-
-  /** Start the streaming word-table maintainer. Pass a durable
-    * `checkpoint` for restart. */
-  def ingestBpeWords(docs: DataFrame, stateDir: String, checkpoint: String,
-                     textCol: String = "text"):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          bpeBatch(batch.toDF(), batchId, stateDir, textCol)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   // -----------------------------------------------------------------
   // Streaming Naive Bayes sufficient statistics — the trained-
@@ -134,54 +69,10 @@ object IndexStreams {
     * foreachBatch caller run the exact same code path). */
   def nbBatch(batch: DataFrame, batchId: Long, stateDir: String,
               labelCol: String = "lang", textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
     val batchCounts =
       graft.functions.NaiveBayes.termCounts(batch, labelCol, textCol)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchCounts.limit(0)
-    graft.functions.NaiveBayes.mergeCounts(standing, batchCounts)
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
-  }
-
-  /** Start the streaming NB count maintainer. */
-  def ingestNbCounts(docs: DataFrame, stateDir: String, checkpoint: String,
-                     labelCol: String = "lang", textCol: String = "text"):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          nbBatch(batch.toDF(), batchId, stateDir, labelCol, textCol)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** The latest committed NB count table under `stateDir` — feed to
-    * NaiveBayes.model/classStats to derive the classifier. */
-  def latestNbCounts(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed NB count versions under $stateDir")
-    spark.read.parquet(versionPath(stateDir, vs.max))
-  }
-
-  /** The latest committed word table under `stateDir` — feed to
-    * Bpe.trainFromWords to (re)derive the merge table. */
-  def latestWordTable(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed word-table versions under $stateDir")
-    spark.read.parquet(versionPath(stateDir, vs.max))
+    VersionedState.fold(stateDir, batchId, batchCounts.limit(0))(
+      graft.functions.NaiveBayes.mergeCounts(_, batchCounts))
   }
 
   // -----------------------------------------------------------------
@@ -198,38 +89,17 @@ object IndexStreams {
   /** One micro-batch of the ExactSubstr fold (public so tests and any
     * foreachBatch caller run the exact same code path). */
   def substrBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                  windowWords: Int): Unit = {
-    val spark = batch.sparkSession
-    val idxDir = s"$stateDir/idx"
-    val prev = new org.apache.hadoop.fs.Path(versionPath(idxDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(idxDir, batchId - 1))
-      else graft.functions.Dedup
-        .exactSubstrIndex(batch.limit(0), windowWords)
-    // probe + fold share one window pass (the fold IS the probe's
-    // combined owner table) — see Dedup.exactSubstrSpansAndFold
-    val (spans, folded) = graft.functions.Dedup
-      .exactSubstrSpansAndFold(standing, batch, windowWords)
-    spans.write.mode("overwrite").parquet(s"$stateDir/spans/b=$batchId")
-    folded.write.mode("overwrite").parquet(versionPath(idxDir, batchId))
-  }
-
-  /** Start the streaming ExactSubstr maintainer. */
-  def ingestSubstr(docs: DataFrame, stateDir: String, checkpoint: String,
-                   windowWords: Int):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          substrBatch(batch.toDF(), batchId, stateDir, windowWords)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                  windowWords: Int): Unit =
+    VersionedState.fold(s"$stateDir/idx", batchId,
+        graft.functions.Dedup.exactSubstrIndex(batch.limit(0), windowWords)) {
+      standing =>
+        // probe + fold share one window pass (the fold IS the probe's
+        // combined owner table) — see Dedup.exactSubstrSpansAndFold
+        val (spans, folded) = graft.functions.Dedup
+          .exactSubstrSpansAndFold(standing, batch, windowWords)
+        spans.write.mode("overwrite").parquet(s"$stateDir/spans/b=$batchId")
+        folded
+    }
 
   /** Every span landed so far (partition-discovered over spans/b=*). */
   def substrSpans(spark: SparkSession, stateDir: String): DataFrame =
@@ -243,6 +113,8 @@ object IndexStreams {
   // batch×batch candidates; standing×standing never re-compares, so
   // the entity table of any committed version equals the one-shot
   // closure over the names streamed so far (q157's oracle property).
+  // Both live under one version, `v=N/{names,comps}`; `names` is the
+  // commit marker, so it lands after `comps`.
   // -----------------------------------------------------------------
 
   /** One micro-batch of the entity fold (public so tests and any
@@ -251,60 +123,29 @@ object IndexStreams {
                   idCol: String, textCol: String, maxDist: Int,
                   q: Int): Unit = {
     val spark = batch.sparkSession
-    val nmDir = s"$stateDir/names"
-    val cpDir = s"$stateDir/comps"
-    val prev = new org.apache.hadoop.fs.Path(versionPath(nmDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bootstrap = !fs.exists(
-      new org.apache.hadoop.fs.Path(prev, "_SUCCESS"))
     val names = batch.select(col(idCol), col(textCol))
-    if (bootstrap) {
-      val pairs = graft.functions.TextAnalysis.fuzzyPairs(names, idCol,
-        textCol, maxDist, q)
-      graft.functions.Dedup.connectedComponents(pairs, "id_a", "id_b",
-          assumeDistinctPairs = true)
-        .write.mode("overwrite").parquet(versionPath(cpDir, batchId))
-      names.write.mode("overwrite").parquet(versionPath(nmDir, batchId))
-    } else {
-      val standNames = spark.read.parquet(versionPath(nmDir, batchId - 1))
-      val standComps = spark.read.parquet(versionPath(cpDir, batchId - 1))
-      val newPairs = graft.functions.TextAnalysis.fuzzyPairsAgainst(
-        standNames, names, idCol, textCol, maxDist, q)
-      graft.functions.Dedup.applyClusterBatch(standComps,
-          newPairs.select("id_a", "id_b"))
-        .write.mode("overwrite").parquet(versionPath(cpDir, batchId))
-      standNames.unionByName(names)
-        .write.mode("overwrite").parquet(versionPath(nmDir, batchId))
-    }
-  }
-
-  /** Start the streaming entity-resolution maintainer. */
-  def ingestEntities(rows: DataFrame, stateDir: String,
-                     checkpoint: String, idCol: String, textCol: String,
-                     maxDist: Int, q: Int):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          entityBatch(batch.toDF(), batchId, stateDir, idCol, textCol,
-            maxDist, q)
+    val (comps, allNames) =
+      VersionedState.prior(spark, stateDir, batchId, "names") match {
+        case None =>
+          val pairs = graft.functions.TextAnalysis.fuzzyPairs(names, idCol,
+            textCol, maxDist, q)
+          (graft.functions.Dedup.connectedComponents(pairs, "id_a", "id_b",
+            assumeDistinctPairs = true), names)
+        case Some(prev) =>
+          val standNames = spark.read.parquet(s"$prev/names")
+          val standComps = spark.read.parquet(s"$prev/comps")
+          val newPairs = graft.functions.TextAnalysis.fuzzyPairsAgainst(
+            standNames, names, idCol, textCol, maxDist, q)
+          (graft.functions.Dedup.applyClusterBatch(standComps,
+            newPairs.select("id_a", "id_b")), standNames.unionByName(names))
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** The latest committed component table under `stateDir`. */
-  def latestEntities(spark: SparkSession, stateDir: String): DataFrame =
-    latestUnder(spark, s"$stateDir/comps")
-
-  private def latestUnder(spark: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed versions under $dir")
-    spark.read.parquet(versionPath(dir, vs.max))
+    val next = VersionedState.path(stateDir, batchId)
+    comps.write.mode("overwrite").parquet(s"$next/comps")
+    allNames.write.mode("overwrite").parquet(s"$next/names")
   }
+
+  /** The component table of the latest committed entity version. */
+  def latestEntities(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(
+      s"${VersionedState.latest(spark, stateDir, "names")}/comps")
 }

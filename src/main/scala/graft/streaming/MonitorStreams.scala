@@ -14,46 +14,19 @@ import graft.functions.{Layout, Sketches}
   * report a batch [[Sketches.psiDrift]] over the full stream would
   * produce (StreamingSpec pins it).
   *
-  * Exactly-once: the DimensionStreams recipe verbatim — batch N reads
-  * committed v=N−1 (gated on `_SUCCESS`), overwrites v=N; replay folds
-  * into the same predecessor state and rewrites the same bytes.
+  * Exactly-once: the [[VersionedState]] fold, for every maintainer here.
   */
 object MonitorStreams {
-
-  private def versionPath(stateDir: String, v: Long) = s"$stateDir/v=$v"
 
   /** One micro-batch of the histogram fold (public so tests and any
     * foreachBatch caller run the exact same code path). */
   def binBatch(batch: DataFrame, batchId: Long, stateDir: String,
                valueCol: String, binWidth: Double): Unit = {
-    val spark = batch.sparkSession
     val batchBins = Sketches.binCounts(batch, valueCol, binWidth)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchBins.limit(0)
-    standing.unionByName(batchBins)
-      .groupBy("bin").agg(sum(col("cnt")).as("cnt"))
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
+    VersionedState.fold(stateDir, batchId, batchBins.limit(0)) {
+      _.unionByName(batchBins).groupBy("bin").agg(sum(col("cnt")).as("cnt"))
+    }
   }
-
-  /** Start the streaming histogram maintainer. Pass a durable
-    * `checkpoint` for restart. */
-  def ingestBins(rows: DataFrame, stateDir: String, checkpoint: String,
-                 valueCol: String, binWidth: Double):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          binBatch(batch.toDF(), batchId, stateDir, valueCol, binWidth)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** One micro-batch of the streaming QUANTILE fold — the KLL member of
     * the standing-artifact family (histograms answer drift, this
@@ -63,46 +36,25 @@ object MonitorStreams {
     * history is never re-read, and the landed array answers any
     * quantile query via [[Sketches.kllQuantileReport]] without another
     * pass over the stream (contrast bisectQuantiles' four batch
-    * passes). Exactly-once: the same versioned `_SUCCESS`-gated
-    * recipe as [[binBatch]]. */
+    * passes). */
   def kllBatch(batch: DataFrame, batchId: Long, stateDir: String,
                valueCol: String, k: Int): Unit = {
-    val spark = batch.sparkSession
     val batchSk = batch.filter(col(valueCol).isNotNull)
       .agg(Sketches.kllSketch(col(valueCol).cast("long"), k).as("sk"))
       .filter(col("sk").isNotNull)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchSk.limit(0)
-    standing.unionByName(batchSk)
-      .agg(Sketches.mergeKllSketches(col("sk"), k).as("sk"))
-      .filter(col("sk").isNotNull)
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
+    VersionedState.fold(stateDir, batchId, batchSk.limit(0)) {
+      _.unionByName(batchSk)
+        .agg(Sketches.mergeKllSketches(col("sk"), k).as("sk"))
+        .filter(col("sk").isNotNull)
+    }
   }
-
-  /** Start the streaming KLL quantile maintainer. */
-  def ingestKll(rows: DataFrame, stateDir: String, checkpoint: String,
-                valueCol: String, k: Int):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          kllBatch(batch.toDF(), batchId, stateDir, valueCol, k)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** Quantiles answered from the latest committed KLL state — no pass
     * over the stream's history, just the O(k) landed sketch. */
   def quantilesFromState(spark: SparkSession, stateDir: String,
                          percentiles: Seq[Int]): DataFrame =
-    Sketches.kllQuantileReport(latestState(spark, stateDir), "sk",
+    Sketches.kllQuantileReport(
+      spark.read.parquet(VersionedState.latest(spark, stateDir)), "sk",
       percentiles)
 
   /** One micro-batch of the streaming LAYOUT monitor — the z-order
@@ -113,41 +65,16 @@ object MonitorStreams {
     * min/max combine ([[Layout.mergeZOrderStats]]). The maintenance
     * loop on an append-heavy table reads this standing report to decide
     * WHEN to run the OPTIMIZE ZORDER rewrite — without ever rescanning
-    * the table. Exactly-once: the versioned `_SUCCESS`-gated recipe. */
+    * the table. */
   def zorderBatch(batch: DataFrame, batchId: Long, stateDir: String,
                   xCol: String, yCol: String, bucketBits: Int,
                   xMin: Long, xMax: Long, yMin: Long,
                   yMax: Long): Unit = {
-    val spark = batch.sparkSession
     val batchStats = Layout.zOrderBucketStatsFixed(batch, xCol, yCol,
       bucketBits, xMin, xMax, yMin, yMax)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchStats.limit(0)
-    Layout.mergeZOrderStats(standing, batchStats)
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
+    VersionedState.fold(stateDir, batchId, batchStats.limit(0))(
+      Layout.mergeZOrderStats(_, batchStats))
   }
-
-  /** Start the streaming z-order layout maintainer. */
-  def ingestZorderStats(rows: DataFrame, stateDir: String,
-                        checkpoint: String, xCol: String, yCol: String,
-                        bucketBits: Int, xMin: Long, xMax: Long,
-                        yMin: Long, yMax: Long):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          zorderBatch(batch.toDF(), batchId, stateDir, xCol, yCol,
-            bucketBits, xMin, xMax, yMin, yMax)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** One micro-batch of the streaming CORPUS-QUALITY monitor — the
     * hygiene member of the standing-artifact family: each batch
@@ -158,11 +85,9 @@ object MonitorStreams {
     * to alarm on quality drift (pass-rate or PII-rate moving) without
     * ever rescanning history; merged ≡ rebuilt exactly (pure counts).
     * Per batch the text is read twice (census + PII scan) — batch-
-    * sized, not corpus-sized. Exactly-once: the versioned
-    * `_SUCCESS`-gated recipe. */
+    * sized, not corpus-sized. */
   def qualityBatch(batch: DataFrame, batchId: Long,
                    stateDir: String): Unit = {
-    val spark = batch.sparkSession
     val g = graft.functions.TextAnalysis.gopherGate(batch)
       .agg(count(lit(1)).as("n_docs"),
         sum(col("gopher_pass").cast("long")).as("n_pass"),
@@ -170,39 +95,19 @@ object MonitorStreams {
     val p = graft.functions.Pii.scan(batch)
       .agg(sum(col("has_pii").cast("long")).as("n_pii"))
     val batchStats = g.crossJoin(p)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchStats.limit(0)
-    standing.unionByName(batchStats)
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_pass")).as("n_pass"),
-        sum(col("n_words")).as("n_words"),
-        sum(col("n_pii")).as("n_pii"))
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
+    VersionedState.fold(stateDir, batchId, batchStats.limit(0)) {
+      _.unionByName(batchStats)
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("n_pass")).as("n_pass"),
+          sum(col("n_words")).as("n_words"),
+          sum(col("n_pii")).as("n_pii"))
+    }
   }
-
-  /** Start the streaming corpus-quality maintainer. */
-  def ingestQuality(docs: DataFrame, stateDir: String,
-                    checkpoint: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          qualityBatch(batch.toDF(), batchId, stateDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** Drift report from the landed quality state: totals + pass/PII
     * rates in exact integer basis points. */
   def qualityReport(spark: SparkSession, stateDir: String): DataFrame =
-    latestState(spark, stateDir)
+    spark.read.parquet(VersionedState.latest(spark, stateDir))
       .select(col("n_docs"), col("n_pass"), col("n_words"), col("n_pii"),
         when(col("n_docs") > 0,
           floor(col("n_pass") * lit(10000.0) / col("n_docs"))
@@ -210,16 +115,6 @@ object MonitorStreams {
         when(col("n_docs") > 0,
           floor(col("n_pii") * lit(10000.0) / col("n_docs"))
             .cast("long")).otherwise(0L).as("pii_bp"))
-
-  /** The latest committed histogram state under `stateDir`. */
-  def latestState(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed histogram versions under $stateDir")
-    spark.read.parquet(versionPath(stateDir, vs.max))
-  }
 
   // -----------------------------------------------------------------
   // Streaming seasonal baseline (q201's state as a standing artifact):
@@ -236,55 +131,26 @@ object MonitorStreams {
     * foreachBatch caller run the exact same code path). */
   def seasonalBatch(batch: DataFrame, batchId: Long,
                     stateDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
     val batchStats = batch
       .groupBy(col("event_type"),
         date_trunc("hour", col("ts")).as("hr"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("event_type"), hour(col("hr")).cast("long").as("h24"))
       .agg(sum(col("c")).as("sum_c"), count(lit(1)).as("n_hours"))
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchStats.limit(0)
-    standing.unionByName(batchStats)
-      .groupBy(col("event_type"), col("h24"))
-      .agg(sum(col("sum_c")).as("sum_c"),
-        sum(col("n_hours")).as("n_hours"))
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
+    VersionedState.fold(stateDir, batchId, batchStats.limit(0)) {
+      _.unionByName(batchStats)
+        .groupBy(col("event_type"), col("h24"))
+        .agg(sum(col("sum_c")).as("sum_c"),
+          sum(col("n_hours")).as("n_hours"))
+    }
   }
-
-  /** Start the streaming seasonal-baseline maintainer. */
-  def ingestSeasonal(rows: DataFrame, stateDir: String,
-                     checkpoint: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          seasonalBatch(batch.toDF(), batchId, stateDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** Baselines in exact milli-counts from the latest committed
     * seasonal state — the q201 formula answered from the landed
     * sufficient statistics. */
   def seasonalBaselines(spark: SparkSession,
-                        stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed seasonal versions under $stateDir")
-    spark.read.parquet(versionPath(stateDir, vs.max))
+                        stateDir: String): DataFrame =
+    spark.read.parquet(VersionedState.latest(spark, stateDir))
       .select(col("event_type"), col("h24"),
         expr("sum_c * 1000 div n_hours").as("baseline_milli"))
-  }
 }

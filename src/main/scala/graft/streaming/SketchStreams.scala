@@ -13,55 +13,17 @@ import graft.functions.Sketches
   * every version; beyond it each version carries the merged-summary
   * bound.
   *
-  * Exactly-once: the DimensionStreams recipe verbatim — batch N reads
-  * committed v=N−1 (gated on `_SUCCESS`), overwrites v=N; replay folds
-  * into the same predecessor state and rewrites the same bytes.
+  * Exactly-once: the [[VersionedState]] fold, for every maintainer here.
   */
 object SketchStreams {
-
-  private def versionPath(stateDir: String, v: Long) = s"$stateDir/v=$v"
 
   /** One micro-batch of the heavy-hitter merge (public so tests and any
     * foreachBatch caller run the exact same code path). */
   def hhBatch(batch: DataFrame, batchId: Long, stateDir: String, k: Int,
               groupCol: String, itemCol: String): Unit = {
-    val spark = batch.sparkSession
     val batchState = Sketches.freqState(batch, groupCol, itemCol, k)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchState.limit(0)
-    Sketches.mergeFreqStates(standing, batchState, k, groupCol)
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
-  }
-
-  /** Start the streaming heavy-hitter maintainer. Pass a durable
-    * `checkpoint` for restart. */
-  def ingestHeavyHitters(rows: DataFrame, stateDir: String,
-                         checkpoint: String, k: Int, groupCol: String,
-                         itemCol: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          hhBatch(batch.toDF(), batchId, stateDir, k, groupCol, itemCol)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** The latest committed heavy-hitter state under `stateDir`. */
-  def latestState(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-    require(vs.nonEmpty, s"no committed sketch versions under $stateDir")
-    spark.read.parquet(versionPath(stateDir, vs.max))
+    VersionedState.fold(stateDir, batchId, batchState.limit(0))(
+      Sketches.mergeFreqStates(_, batchState, k, groupCol))
   }
 
   /** One micro-batch of the Count-Min merge — the point-frequency
@@ -72,37 +34,14 @@ object SketchStreams {
     * everything streamed so far. */
   def cmBatch(batch: DataFrame, batchId: Long, stateDir: String,
               itemCol: String, width: Int, depth: Int): Unit = {
-    val spark = batch.sparkSession
     // fan = false: a micro-batch is small by contract — the parallelism
     // floor's exchange costs more than the batch's hash kernel saves
     // (measured r19: q250 1.92 s -> 2.62 s isolated with the fan on)
     val batchState = Sketches.countMin(batch, itemCol, width, depth,
       fan = false)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchState.limit(0)
-    Sketches.mergeCountMin(standing, batchState)
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
+    VersionedState.fold(stateDir, batchId, batchState.limit(0))(
+      Sketches.mergeCountMin(_, batchState))
   }
-
-  /** Start the streaming Count-Min maintainer. */
-  def ingestCountMin(rows: DataFrame, stateDir: String,
-                     checkpoint: String, itemCol: String, width: Int,
-                     depth: Int):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          cmBatch(batch.toDF(), batchId, stateDir, itemCol, width, depth)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** Fold one batch's HyperLogLog registers into the standing table
     * (Sketches.hllRegisters / mergeHll — elementwise max, so unlike
@@ -112,17 +51,9 @@ object SketchStreams {
     * rows per group without rescanning history. */
   def hllBatch(batch: DataFrame, batchId: Long, stateDir: String,
                groupCol: String, valueCol: String, p: Int): Unit = {
-    val spark = batch.sparkSession
     val batchState = Sketches.hllRegisters(batch, groupCol, valueCol, p)
-    val prev = new org.apache.hadoop.fs.Path(versionPath(stateDir,
-      batchId - 1))
-    val fs = prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val standing =
-      if (fs.exists(new org.apache.hadoop.fs.Path(prev, "_SUCCESS")))
-        spark.read.parquet(versionPath(stateDir, batchId - 1))
-      else batchState.limit(0)
-    Sketches.mergeHll(standing, batchState, groupCol)
-      .write.mode("overwrite").parquet(versionPath(stateDir, batchId))
+    VersionedState.fold(stateDir, batchId, batchState.limit(0))(
+      Sketches.mergeHll(_, batchState, groupCol))
   }
 
   /** Fold one batch into the standing CO-OCCURRENCE state (the q206
@@ -137,10 +68,8 @@ object SketchStreams {
     * regardless of how events split across batches or how often a
     * (user, type) repeats. Per-batch work is O(batch × per-user types):
     * the bounded type domain makes the join volume users·types² at
-    * worst, never events².
-    *
-    * Exactly-once: the DimensionStreams recipe — batch N reads committed
-    * v=N−1 (gated on `_SUCCESS`), overwrites v=N. */
+    * worst, never events². `ut` is the version's commit marker, so it
+    * lands after `pc`. */
   def cooccurBatch(batch: DataFrame, batchId: Long,
                    stateDir: String, userCol: String = "user_id",
                    typeCol: String = "event_type"): Unit = {
@@ -148,35 +77,21 @@ object SketchStreams {
     val spark = batch.sparkSession
     val batchUt = batch.select(col(userCol).as("user_id"),
       col(typeCol).as("event_type")).distinct()
-    val prevUt = new org.apache.hadoop.fs.Path(
-      s"${versionPath(stateDir, batchId - 1)}/ut")
-    val fs = prevUt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bootstrapped = fs.exists(
-      new org.apache.hadoop.fs.Path(prevUt, "_SUCCESS"))
-    val standingUt =
-      if (bootstrapped)
-        spark.read.parquet(s"${versionPath(stateDir, batchId - 1)}/ut")
-      else batchUt.limit(0)
-    val standingPc =
-      if (bootstrapped)
-        spark.read.parquet(s"${versionPath(stateDir, batchId - 1)}/pc")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("type_a",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("type_b",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_ab",
-            org.apache.spark.sql.types.LongType))))
+    val (standingUt, standingPc) =
+      VersionedState.prior(spark, stateDir, batchId, "ut") match {
+        case Some(prev) =>
+          (spark.read.parquet(s"$prev/ut"), spark.read.parquet(s"$prev/pc"))
+        case None =>
+          (batchUt.limit(0), spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType.fromDDL(
+              "type_a STRING, type_b STRING, n_ab BIGINT")))
+      }
     val (mergedUt, mergedPc) = cooccurFold(standingUt, standingPc,
       batchUt)
-    // pc lands FIRST: the predecessor gate (and any reader) keys on
-    // ut/_SUCCESS, so a version is only ever visible complete
-    mergedPc.write.mode("overwrite")
-      .parquet(s"${versionPath(stateDir, batchId)}/pc")
-    mergedUt.write.mode("overwrite")
-      .parquet(s"${versionPath(stateDir, batchId)}/ut")
+    val next = VersionedState.path(stateDir, batchId)
+    mergedPc.write.mode("overwrite").parquet(s"$next/pc")
+    mergedUt.write.mode("overwrite").parquet(s"$next/ut")
   }
 
   /** The pure co-occurrence fold shared by the streaming maintainer and
@@ -211,51 +126,8 @@ object SketchStreams {
     (standingUt.unionByName(newUt), mergedPc)
   }
 
-  /** Start the streaming co-occurrence maintainer. */
-  def ingestCooccurrence(rows: DataFrame, stateDir: String,
-                         checkpoint: String, userCol: String = "user_id",
-                         typeCol: String = "event_type"):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          cooccurBatch(batch.toDF(), batchId, stateDir, userCol, typeCol)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** The latest committed co-occurrence pair counts under `stateDir`.
-    * "Committed" = the version's `ut/_SUCCESS` marker exists — the same
-    * gate cooccurBatch keys its predecessor read on (pc lands before
-    * ut, so ut/_SUCCESS is the version's commit point); a torn version
-    * left by a crash mid-write is skipped here exactly as the stream's
-    * own replay skips it. */
+  /** The pair counts of the latest committed co-occurrence version. */
   def latestCooccurrence(spark: SparkSession,
-                         stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong)
-      .filter(v => fs.exists(new org.apache.hadoop.fs.Path(
-        s"${versionPath(stateDir, v)}/ut/_SUCCESS")))
-    require(vs.nonEmpty, s"no committed co-occurrence versions under " +
-      stateDir)
-    spark.read.parquet(s"${versionPath(stateDir, vs.max)}/pc")
-  }
-
-  /** Start the streaming HyperLogLog maintainer. */
-  def ingestHll(rows: DataFrame, stateDir: String, checkpoint: String,
-                groupCol: String, valueCol: String, p: Int = 9):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          hllBatch(batch.toDF(), batchId, stateDir, groupCol, valueCol, p)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                         stateDir: String): DataFrame =
+    spark.read.parquet(s"${VersionedState.latest(spark, stateDir, "ut")}/pc")
 }

@@ -126,9 +126,10 @@ class KllSpec extends AnyFunSuite {
     }
     val k = 256
     def runOnce(): Unit =
-      graft.streaming.MonitorStreams.ingestKll(
-        spark.readStream.schema(li.schema).parquet(src), st, ckpt,
-        "m", k).awaitTermination(120000)
+      graft.streaming.VersionedState.ingest(
+        spark.readStream.schema(li.schema).parquet(src), ckpt)(
+        graft.streaming.MonitorStreams.kllBatch(_, _, st, "m", k))
+        .awaitTermination(120000)
     (0 until 3).foreach { w =>
       stage(s"w$w", li.filter(col("id") % 3 === w))
       runOnce()

@@ -136,7 +136,7 @@ class Round12Spec extends AnyFunSuite {
 
   test("binBatch replay (crash-redelivery of the same batch id) rewrites " +
     "the same state; the fold never double-counts") {
-    import graft.streaming.MonitorStreams
+    import graft.streaming.{MonitorStreams, VersionedState}
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft-r12-bins").toString
     val rows = (1 to 100).map(i => (i.toLong, (i % 7) * 10.0 + i % 3))
@@ -145,12 +145,12 @@ class Round12Spec extends AnyFunSuite {
       stateDir, "value", 10.0)
     MonitorStreams.binBatch(rows.filter(col("event_id") > 50), 1L,
       stateDir, "value", 10.0)
-    val after = MonitorStreams.latestState(spark, stateDir)
+    val after = spark.read.parquet(VersionedState.latest(spark, stateDir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // replay batch 1 (reads committed v=0, rewrites v=1)
     MonitorStreams.binBatch(rows.filter(col("event_id") > 50), 1L,
       stateDir, "value", 10.0)
-    val replayed = MonitorStreams.latestState(spark, stateDir)
+    val replayed = spark.read.parquet(VersionedState.latest(spark, stateDir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(replayed == after)
     // and the fold total equals the one-shot count

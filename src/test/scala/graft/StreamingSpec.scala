@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, VersionedState}
 
 /** Structured Streaming over the driver's events table: the streaming
   * plans must produce the same aggregates as their batch twins
@@ -21,6 +21,23 @@ class StreamingSpec extends AnyFunSuite {
       d.resolve("events.parquet"))
     d.toString
   }
+
+  /** Stage `df` as one parquet file `src/name.parquet`: each staged
+    * file becomes one micro-batch of a stream over `src`. */
+  private def stage(src: String, name: String,
+                    df: org.apache.spark.sql.DataFrame): Unit = {
+    val tmp = java.nio.file.Files
+      .createTempDirectory(s"graft-stage-$name").toString
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(s"$src/$name.parquet"))
+  }
+
+  /** The latest committed version of the single-frame state at `dir`. */
+  private def latest(dir: String): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(VersionedState.latest(spark, dir))
 
   test("tumbling window streaming agg matches batch groupBy") {
     val stream = EventStreams.readEvents(spark, streamDir)
@@ -89,10 +106,15 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch ingestion lands partitioned parquet in the warehouse") {
     val stream = EventStreams.readEvents(spark, streamDir)
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-ingest").toString + "/events"
-    val q = EventStreams.ingestToWarehouse(stream, out)
-    q.awaitTermination(60000)
+    val base = java.nio.file.Files.createTempDirectory("graft-ingest")
+      .toString
+    val out = s"$base/events"
+    VersionedState.ingest(stream.withColumn("event_date",
+        org.apache.spark.sql.functions.to_date(
+          org.apache.spark.sql.functions.col("ts"))), s"$base/ckpt") {
+      (batch, _) =>
+        batch.write.mode("append").partitionBy("event_date").parquet(out)
+    }.awaitTermination(60000)
     val landed = spark.read.parquet(out)
     assert(landed.count() == 1000)
     // Hive-style partition dirs by event_date
@@ -233,7 +255,8 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = s"$base/ckpt"
 
     val stream = EventStreams.readEvents(spark, streamDir)
-    EventStreams.ingestExactlyOnce(stream, out, ckpt)
+    VersionedState.ingest(stream, ckpt)(
+      EventStreams.idempotentBatchWrite(_, _, out))
       .awaitTermination(60000)
     val afterFirst = spark.read.option("basePath", out).parquet(out)
     assert(afterFirst.count() == 1000)
@@ -250,8 +273,8 @@ class StreamingSpec extends AnyFunSuite {
 
     // restart against the SAME checkpoint: the source has no new files,
     // so nothing is reprocessed and the output is unchanged
-    EventStreams.ingestExactlyOnce(
-      EventStreams.readEvents(spark, streamDir), out, ckpt)
+    VersionedState.ingest(EventStreams.readEvents(spark, streamDir), ckpt)(
+      EventStreams.idempotentBatchWrite(_, _, out))
       .awaitTermination(60000)
     spark.catalog.refreshByPath(out)
     assert(spark.read.option("basePath", out).parquet(out).count() == 1000)
@@ -285,20 +308,13 @@ class StreamingSpec extends AnyFunSuite {
     // twin must train the same one — so waves split on (vec_id div 4)
     // to keep ids 0..3 together in wave 0
     def waveOf = pmod(expr("vec_id div 4"), lit(3))
-    def stageWave(i: Int): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-sann-w$i").toString
-      vecs.filter(waveOf === i).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/wave$i.parquet"))
-    }
+    def stageWave(i: Int): Unit =
+      stage(src, s"wave$i", vecs.filter(waveOf === i))
     def runOnce(): Unit =
-      graft.streaming.EmbeddingStreams.ingestAssignments(
-        spark.readStream.schema(vecs.schema).parquet(src),
-        index, out, ckpt, k = 4, lloydIters = 1)
+      VersionedState.ingest(
+        spark.readStream.schema(vecs.schema).parquet(src), ckpt)(
+        graft.streaming.EmbeddingStreams.assignBatch(_, _, index, out,
+          k = 4, lloydIters = 1))
         .awaitTermination(120000)
     def cells(): Map[Long, Long] = {
       spark.catalog.refreshByPath(out)
@@ -387,20 +403,13 @@ class StreamingSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     // three arrival waves; each staged file becomes one micro-batch
-    def stageWave(i: Int): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-snd-w$i").toString
-      docs.filter(col("doc_id") % 3 === i).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/wave$i.parquet"))
-    }
+    def stageWave(i: Int): Unit =
+      stage(src, s"wave$i", docs.filter(col("doc_id") % 3 === i))
     def runOnce(): Unit =
-      graft.streaming.DocumentStreams.ingestNearDups(
-        spark.readStream.schema(docs.schema).parquet(src),
-        index, out, ckpt, minJaccardBp = 2000)
+      VersionedState.ingest(
+        spark.readStream.schema(docs.schema).parquet(src), ckpt)(
+        graft.streaming.DocumentStreams.nearDupBatch(_, _, index, out,
+          "doc_id", "text", 3, 4, 4, 2000))
         .awaitTermination(120000)
     def countIf(path: String): Long = {
       spark.catalog.refreshByPath(path)
@@ -475,21 +484,13 @@ class StreamingSpec extends AnyFunSuite {
       .select("doc_id", "text")
     val eval = docs.filter(col("doc_id") % 17 === 0)
     val corpus = docs.filter(col("doc_id") % 17 =!= 0)
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-scur-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.DocumentStreams.ingestCurated(
-        spark.readStream.schema(corpus.schema).parquet(src), eval,
-        s"$base/index", s"$base/pairs", s"$base/curated",
-        s"$base/ckpt", minJaccardBp = 2000)
+      VersionedState.ingest(
+        spark.readStream.schema(corpus.schema).parquet(src),
+        s"$base/ckpt")(
+        graft.streaming.DocumentStreams.curateBatch(_, _, eval,
+          s"$base/index", s"$base/pairs", s"$base/curated",
+          minJaccardBp = 2000))
         .awaitTermination(180000)
     def curated(): Set[Long] = {
       spark.catalog.refreshByPath(s"$base/curated")
@@ -501,11 +502,11 @@ class StreamingSpec extends AnyFunSuite {
     // makes streamed keep-first equal the one-shot lower-id-wins policy
     val w0 = corpus.filter(col("doc_id") < 150)
     val w12 = corpus.filter(col("doc_id") >= 150)
-    stage("w0", w0)
+    stage(src, "w0", w0)
     runOnce()
-    stage("w1", corpus.filter(col("doc_id") >= 150
+    stage(src, "w1", corpus.filter(col("doc_id") >= 150
       && col("doc_id") < 300))
-    stage("w2", corpus.filter(col("doc_id") >= 300))
+    stage(src, "w2", corpus.filter(col("doc_id") >= 300))
     runOnce()
 
     // one-shot twin of the policy over the full corpus
@@ -550,33 +551,23 @@ class StreamingSpec extends AnyFunSuite {
       .select("o_custkey", "o_orderkey", "o_orderstatus", "o_orderdate")
     val cut1 = lit(java.sql.Timestamp.valueOf("1995-01-01 00:00:00"))
     val cut2 = lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00"))
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-sscd-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.DimensionStreams.ingestScd2(
-        spark.readStream.schema(orders.schema).parquet(src), dim, ckpt)
+      VersionedState.ingest(
+        spark.readStream.schema(orders.schema).parquet(src), ckpt)(
+        graft.streaming.DimensionStreams.upsertBatch(_, _, dim))
         .awaitTermination(120000)
     def dimRows(): Set[Seq[Any]] = {
       spark.catalog.refreshByPath(dim)
-      graft.streaming.DimensionStreams.latestDim(spark, dim)
-        .collect().map(_.toSeq).toSet
+      latest(dim).collect().map(_.toSeq).toSet
     }
 
     // three strictly time-ordered waves (the applyBatch contract)
-    stage("w0", orders.filter(col("o_orderdate") < cut1))
+    stage(src, "w0", orders.filter(col("o_orderdate") < cut1))
     runOnce()
-    stage("w1", orders.filter(col("o_orderdate") >= cut1
+    stage(src, "w1", orders.filter(col("o_orderdate") >= cut1
       && col("o_orderdate") < cut2))
     runOnce()
-    stage("w2", orders.filter(col("o_orderdate") >= cut2))
+    stage(src, "w2", orders.filter(col("o_orderdate") >= cut2))
     runOnce()
 
     val got = dimRows()
@@ -608,33 +599,23 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     val docs = graft.sources.Tables.load(spark, dir, "documents")
       .select("doc_id", "text")
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-sindex-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.IndexStreams.ingestIndexed(
-        spark.readStream.schema(docs.schema).parquet(src), ix, ckpt,
-        maxPostings = 16)
+      VersionedState.ingest(
+        spark.readStream.schema(docs.schema).parquet(src), ckpt)(
+        graft.streaming.IndexStreams.indexBatch(_, _, ix,
+          maxPostings = 16))
         .awaitTermination(120000)
     def ixRows(): Set[Seq[Any]] = {
       spark.catalog.refreshByPath(ix)
-      graft.streaming.IndexStreams.latestIndex(spark, ix)
-        .collect().map(_.toSeq).toSet
+      latest(ix).collect().map(_.toSeq).toSet
     }
 
     // three waves partitioning the corpus by id (each doc arrives once)
-    stage("w0", docs.filter(col("doc_id") % 3 === 0))
+    stage(src, "w0", docs.filter(col("doc_id") % 3 === 0))
     runOnce()
-    stage("w1", docs.filter(col("doc_id") % 3 === 1))
+    stage(src, "w1", docs.filter(col("doc_id") % 3 === 1))
     runOnce()
-    stage("w2", docs.filter(col("doc_id") % 3 === 2))
+    stage(src, "w2", docs.filter(col("doc_id") % 3 === 2))
     runOnce()
 
     val want = graft.functions.Retrieval
@@ -667,33 +648,23 @@ class StreamingSpec extends AnyFunSuite {
     val ev = graft.sources.Tables.events(spark, dir)
       .withColumn("day", date_trunc("day", col("ts")))
       .select("day", "event_type", "event_id")
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-shh-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.SketchStreams.ingestHeavyHitters(
-        spark.readStream.schema(ev.schema).parquet(src), st, ckpt,
-        k = 16, groupCol = "day", itemCol = "event_type")
+      VersionedState.ingest(
+        spark.readStream.schema(ev.schema).parquet(src), ckpt)(
+        graft.streaming.SketchStreams.hhBatch(_, _, st,
+          k = 16, groupCol = "day", itemCol = "event_type"))
         .awaitTermination(120000)
     def stateRows(): Set[(java.sql.Timestamp, String, Long)] = {
       spark.catalog.refreshByPath(st)
-      graft.streaming.SketchStreams.latestState(spark, st)
-        .collect().map(r => (r.getTimestamp(0), r.getString(1),
+      latest(st).collect().map(r => (r.getTimestamp(0), r.getString(1),
           r.getLong(2))).toSet
     }
 
-    stage("w0", ev.filter(col("event_id") % 3 === 0))
+    stage(src, "w0", ev.filter(col("event_id") % 3 === 0))
     runOnce()
-    stage("w1", ev.filter(col("event_id") % 3 === 1))
+    stage(src, "w1", ev.filter(col("event_id") % 3 === 1))
     runOnce()
-    stage("w2", ev.filter(col("event_id") % 3 === 2))
+    stage(src, "w2", ev.filter(col("event_id") % 3 === 2))
     runOnce()
 
     val want = ev.groupBy("day", "event_type")
@@ -725,32 +696,22 @@ class StreamingSpec extends AnyFunSuite {
         (col("l_partkey").cast("long") + 1000000000L).as("id_b"))
       .distinct()
     val wave = pmod(col("id_a") * 31 + col("id_b"), lit(3))
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-sdeg-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.GraphStreams.ingestDegrees(
-        spark.readStream.schema(edges.schema).parquet(src), st, ckpt)
+      VersionedState.ingest(
+        spark.readStream.schema(edges.schema).parquet(src), ckpt)(
+        graft.streaming.GraphStreams.degreeBatch(_, _, st))
         .awaitTermination(120000)
     def stateRows(): Set[(Long, Long)] = {
       spark.catalog.refreshByPath(st)
-      graft.streaming.GraphStreams.latestState(spark, st)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      latest(st).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
 
     // three waves partitioning the distinct edge set (each edge once)
-    stage("w0", edges.filter(wave === 0))
+    stage(src, "w0", edges.filter(wave === 0))
     runOnce()
-    stage("w1", edges.filter(wave === 1))
+    stage(src, "w1", edges.filter(wave === 1))
     runOnce()
-    stage("w2", edges.filter(wave === 2))
+    stage(src, "w2", edges.filter(wave === 2))
     runOnce()
 
     val want = graft.functions.Graph.degrees(edges)
@@ -775,35 +736,25 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     val ev = graft.sources.Tables.events(spark, dir)
       .select("event_id", "event_type")
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-scm-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.SketchStreams.ingestCountMin(
-        spark.readStream.schema(ev.schema).parquet(src), st, ckpt,
-        "event_type", width = 64, depth = 3)
+      VersionedState.ingest(
+        spark.readStream.schema(ev.schema).parquet(src), ckpt)(
+        graft.streaming.SketchStreams.cmBatch(_, _, st,
+          "event_type", width = 64, depth = 3))
         .awaitTermination(120000)
 
-    stage("w0", ev.filter(col("event_id") % 3 === 0))
+    stage(src, "w0", ev.filter(col("event_id") % 3 === 0))
     runOnce()
-    stage("w1", ev.filter(col("event_id") % 3 === 1))
+    stage(src, "w1", ev.filter(col("event_id") % 3 === 1))
     runOnce()
-    stage("w2", ev.filter(col("event_id") % 3 === 2))
+    stage(src, "w2", ev.filter(col("event_id") % 3 === 2))
     runOnce()
 
     def cells(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
         .toMap
     spark.catalog.refreshByPath(st)
-    val latest = graft.streaming.SketchStreams.latestState(spark, st)
-    assert(cells(latest) ==
+    assert(cells(latest(st)) ==
       cells(graft.functions.Sketches.countMin(ev, "event_type", 64, 3)))
 
     runOnce() // restart, no new files
@@ -811,7 +762,7 @@ class StreamingSpec extends AnyFunSuite {
       ev.filter(col("event_id") % 3 === 2), batchId = 2, st,
       "event_type", width = 64, depth = 3)
     spark.catalog.refreshByPath(st)
-    assert(cells(graft.streaming.SketchStreams.latestState(spark, st)) ==
+    assert(cells(latest(st)) ==
       cells(graft.functions.Sketches.countMin(ev, "event_type", 64, 3)))
   }
 
@@ -827,50 +778,40 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     val ev = graft.sources.Tables.events(spark, dir)
       .select("event_id", "event_type", "user_id")
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-shll-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.SketchStreams.ingestHll(
-        spark.readStream.schema(ev.schema).parquet(src), st, ckpt,
-        "event_type", "user_id")
+      VersionedState.ingest(
+        spark.readStream.schema(ev.schema).parquet(src), ckpt)(
+        graft.streaming.SketchStreams.hllBatch(_, _, st,
+          "event_type", "user_id", p = 9))
         .awaitTermination(120000)
 
-    stage("w0", ev.filter(col("event_id") % 3 === 0))
+    stage(src, "w0", ev.filter(col("event_id") % 3 === 0))
     runOnce()
     // wave 1 deliberately OVERLAPS wave 0 (ids % 3 in {0, 1}): the
     // register fold must tolerate re-seen values, the property that
     // separates HLL state from Count-Min's add-only cells
-    stage("w1", ev.filter(col("event_id") % 3 <= 1))
+    stage(src, "w1", ev.filter(col("event_id") % 3 <= 1))
     runOnce()
-    stage("w2", ev.filter(col("event_id") % 3 === 2))
+    stage(src, "w2", ev.filter(col("event_id") % 3 === 2))
     runOnce()
 
     def regs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
         .toMap
     spark.catalog.refreshByPath(st)
-    val latest = graft.streaming.SketchStreams.latestState(spark, st)
+    val landed = latest(st)
     val oneShot = graft.functions.Sketches
       .hllRegisters(ev, "event_type", "user_id")
-    assert(regs(latest) == regs(oneShot))
+    assert(regs(landed) == regs(oneShot))
     // estimates answered from the LANDED state match one-shot exactly
     def est(df: org.apache.spark.sql.DataFrame) =
       graft.functions.Sketches.hllEstimate(df, "event_type")
         .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-    assert(est(latest) == est(oneShot))
+    assert(est(landed) == est(oneShot))
 
     runOnce() // restart, no new files: nothing changes
     spark.catalog.refreshByPath(st)
-    assert(regs(graft.streaming.SketchStreams.latestState(spark, st)) ==
-      regs(oneShot))
+    assert(regs(latest(st)) == regs(oneShot))
   }
 
   test("streaming ExactSubstr: append-only doc waves fold the window-" +
@@ -885,28 +826,20 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     val docs = graft.sources.Tables.load(spark, dir, "documents")
       .select("doc_id", "text")
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-ssub-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.IndexStreams.ingestSubstr(
-        spark.readStream.schema(docs.schema).parquet(src), st, ckpt,
-        windowWords = 5)
+      VersionedState.ingest(
+        spark.readStream.schema(docs.schema).parquet(src), ckpt)(
+        graft.streaming.IndexStreams.substrBatch(_, _, st,
+          windowWords = 5))
         .awaitTermination(120000)
 
     // append-only id contract: waves ascend
-    stage("w0", docs.filter(col("doc_id") < 167))
+    stage(src, "w0", docs.filter(col("doc_id") < 167))
     runOnce()
-    stage("w1", docs.filter(col("doc_id") >= 167 && col("doc_id") < 334))
+    stage(src, "w1",
+      docs.filter(col("doc_id") >= 167 && col("doc_id") < 334))
     runOnce()
-    stage("w2", docs.filter(col("doc_id") >= 334))
+    stage(src, "w2", docs.filter(col("doc_id") >= 334))
     runOnce()
 
     def spanSet(df: org.apache.spark.sql.DataFrame) =
@@ -938,27 +871,18 @@ class StreamingSpec extends AnyFunSuite {
     val names = graft.sources.Tables.load(spark, dir, "part")
       .groupBy(col("p_name")).agg(min(col("p_partkey")).as("pid"))
       .select(col("pid"), col("p_name"))
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-sent-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.IndexStreams.ingestEntities(
-        spark.readStream.schema(names.schema).parquet(src), st, ckpt,
-        "pid", "p_name", maxDist = 2, q = 2)
+      VersionedState.ingest(
+        spark.readStream.schema(names.schema).parquet(src), ckpt)(
+        graft.streaming.IndexStreams.entityBatch(_, _, st,
+          "pid", "p_name", maxDist = 2, q = 2))
         .awaitTermination(120000)
 
-    stage("w0", names.filter(col("pid") % 3 === 0))
+    stage(src, "w0", names.filter(col("pid") % 3 === 0))
     runOnce()
-    stage("w1", names.filter(col("pid") % 3 === 1))
+    stage(src, "w1", names.filter(col("pid") % 3 === 1))
     runOnce()
-    stage("w2", names.filter(col("pid") % 3 === 2))
+    stage(src, "w2", names.filter(col("pid") % 3 === 2))
     runOnce()
 
     def compSet(df: org.apache.spark.sql.DataFrame) =
@@ -986,28 +910,19 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     val ev = graft.sources.Tables.events(spark, dir)
       .select("event_id", "event_type", "ts")
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-sseas-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.MonitorStreams.ingestSeasonal(
-        spark.readStream.schema(ev.schema).parquet(src), st, ckpt)
+      VersionedState.ingest(
+        spark.readStream.schema(ev.schema).parquet(src), ckpt)(
+        graft.streaming.MonitorStreams.seasonalBatch(_, _, st))
         .awaitTermination(120000)
 
     // whole-day waves respect the whole-hour batch contract
-    stage("w0", ev.filter(dayofmonth(col("ts")) <= 10))
+    stage(src, "w0", ev.filter(dayofmonth(col("ts")) <= 10))
     runOnce()
-    stage("w1", ev.filter(
+    stage(src, "w1", ev.filter(
       dayofmonth(col("ts")) > 10 && dayofmonth(col("ts")) <= 20))
     runOnce()
-    stage("w2", ev.filter(dayofmonth(col("ts")) > 20))
+    stage(src, "w2", ev.filter(dayofmonth(col("ts")) > 20))
     runOnce()
 
     spark.catalog.refreshByPath(st)
@@ -1039,37 +954,28 @@ class StreamingSpec extends AnyFunSuite {
       .select("event_id", "value")
     val refDf = ev.filter(col("event_id") % 2 === 0)
     val streamed = ev.filter(col("event_id") % 2 === 1)
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-smon-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.MonitorStreams.ingestBins(
-        spark.readStream.schema(streamed.schema).parquet(src), st, ckpt,
-        "value", binWidth = 25.0)
+      VersionedState.ingest(
+        spark.readStream.schema(streamed.schema).parquet(src), ckpt)(
+        graft.streaming.MonitorStreams.binBatch(_, _, st,
+          "value", binWidth = 25.0))
         .awaitTermination(120000)
 
-    stage("w0", streamed.filter(col("event_id") % 3 === 0))
+    stage(src, "w0", streamed.filter(col("event_id") % 3 === 0))
     runOnce()
-    stage("w1", streamed.filter(col("event_id") % 3 === 1))
+    stage(src, "w1", streamed.filter(col("event_id") % 3 === 1))
     runOnce()
-    stage("w2", streamed.filter(col("event_id") % 3 === 2))
+    stage(src, "w2", streamed.filter(col("event_id") % 3 === 2))
     runOnce()
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("bin").collect().map(_.toSeq).toSeq
     spark.catalog.refreshByPath(st)
-    val latest = graft.streaming.MonitorStreams.latestState(spark, st)
-    assert(rows(latest) ==
+    val landed = latest(st)
+    assert(rows(landed) ==
       rows(graft.functions.Sketches.binCounts(streamed, "value", 25.0)))
     val viaStates = rows(graft.functions.Sketches.psiFromBins(
-      graft.functions.Sketches.binCounts(refDf, "value", 25.0), latest))
+      graft.functions.Sketches.binCounts(refDf, "value", 25.0), landed))
     val batch = rows(graft.functions.Sketches.psiDrift(
       refDf, streamed, "value", 25.0))
     assert(viaStates == batch)
@@ -1081,7 +987,7 @@ class StreamingSpec extends AnyFunSuite {
       streamed.filter(col("event_id") % 3 === 2), batchId = 2, st,
       "value", binWidth = 25.0)
     spark.catalog.refreshByPath(st)
-    assert(rows(graft.streaming.MonitorStreams.latestState(spark, st)) ==
+    assert(rows(latest(st)) ==
       rows(graft.functions.Sketches.binCounts(streamed, "value", 25.0)))
   }
 
@@ -1097,24 +1003,15 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     val li = graft.sources.Tables.load(spark, dir, "lineitem")
       .select("l_orderkey", "l_partkey", "l_suppkey")
-    def stage(name: String,
-              df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-szorder-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     val (bb, xMn, xMx, yMn, yMx) = (6, 0L, 1L << 16, 0L, 1L << 13)
     def runOnce(): Unit =
-      graft.streaming.MonitorStreams.ingestZorderStats(
-        spark.readStream.schema(li.schema).parquet(src), st, ckpt,
-        "l_partkey", "l_suppkey", bb, xMn, xMx, yMn, yMx)
+      VersionedState.ingest(
+        spark.readStream.schema(li.schema).parquet(src), ckpt)(
+        graft.streaming.MonitorStreams.zorderBatch(_, _, st,
+          "l_partkey", "l_suppkey", bb, xMn, xMx, yMn, yMx))
         .awaitTermination(120000)
     (0 until 3).foreach { w =>
-      stage(s"w$w", li.filter(col("l_orderkey") % 3 === w))
+      stage(src, s"w$w", li.filter(col("l_orderkey") % 3 === w))
       runOnce()
     }
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1122,23 +1019,26 @@ class StreamingSpec extends AnyFunSuite {
     spark.catalog.refreshByPath(st)
     val oneShot = rows(graft.functions.Layout.zOrderBucketStatsFixed(
       li, "l_partkey", "l_suppkey", bb, xMn, xMx, yMn, yMx))
-    assert(rows(graft.streaming.MonitorStreams.latestState(spark, st))
-      == oneShot)
+    assert(rows(latest(st)) == oneShot)
     graft.streaming.MonitorStreams.zorderBatch( // hand-replayed crash
       li.filter(col("l_orderkey") % 3 === 2), batchId = 2, st,
       "l_partkey", "l_suppkey", bb, xMn, xMx, yMn, yMx)
     spark.catalog.refreshByPath(st)
-    assert(rows(graft.streaming.MonitorStreams.latestState(spark, st))
-      == oneShot)
+    assert(rows(latest(st)) == oneShot)
   }
 
   test("round-trip: streaming ingestion feeds the batch query surface " +
     "with identical aggregates") {
     import org.apache.spark.sql.functions._
     val stream = EventStreams.readEvents(spark, streamDir)
-    val warehouse = java.nio.file.Files
-      .createTempDirectory("graft-roundtrip").toString + "/events"
-    EventStreams.ingestToWarehouse(stream, warehouse).awaitTermination(60000)
+    val base = java.nio.file.Files.createTempDirectory("graft-roundtrip")
+      .toString
+    val warehouse = s"$base/events"
+    VersionedState.ingest(stream.withColumn("event_date",
+        to_date(col("ts"))), s"$base/ckpt") { (batch, _) =>
+      batch.write.mode("append").partitionBy("event_date")
+        .parquet(warehouse)
+    }.awaitTermination(60000)
 
     def hourly(df: org.apache.spark.sql.DataFrame) = df
       .groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type"))
@@ -1169,19 +1069,13 @@ class StreamingSpec extends AnyFunSuite {
     val cuts = Seq(0L, maxId / 3, 2 * maxId / 3, maxId + 1)
     def wave(i: Int) = vecs.filter(col("vec_id") >= cuts(i) &&
       col("vec_id") < cuts(i + 1))
-    def stageWave(i: Int): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-shnsw-w$i").toString
-      wave(i).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/wave$i.parquet"))
-    }
+    def stageWave(i: Int): Unit =
+      stage(src, s"wave$i", wave(i))
     def runOnce(): Unit =
-      graft.streaming.EmbeddingStreams.ingestHnsw(
-        spark.readStream.schema(vecs.schema).parquet(src),
-        state, ckpt, nShards = 2, m = 6, efConstruction = 32)
+      VersionedState.ingest(
+        spark.readStream.schema(vecs.schema).parquet(src), ckpt)(
+        graft.streaming.EmbeddingStreams.hnswBatch(_, _, state,
+          nShards = 2, m = 6, efConstruction = 32))
         .awaitTermination(120000)
     def landedRows() = {
       spark.catalog.refreshByPath(state)
@@ -1246,20 +1140,14 @@ class StreamingSpec extends AnyFunSuite {
     // wave 0 must carry the full seed set (vec_id < 16) for the
     // deterministic bootstrap — split on (vec_id div 16) % 3
     def waveOf = pmod(expr("vec_id div 16"), lit(3))
-    def stageWave(i: Int): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-spq-w$i").toString
-      vecs.filter(waveOf === i).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/wave$i.parquet"))
-    }
+    def stageWave(i: Int): Unit =
+      stage(src, s"wave$i", vecs.filter(waveOf === i))
     def runOnce(): Unit =
-      graft.streaming.EmbeddingStreams.ingestPqCodes(
-        spark.readStream.schema(vecs.schema).parquet(src), index, out,
-        ckpt).awaitTermination(120000)
+      VersionedState.ingest(
+        spark.readStream.schema(vecs.schema).parquet(src), ckpt)(
+        graft.streaming.EmbeddingStreams.pqEncodeBatch(_, _, index, out,
+          nsub = 8, k = 16, dsub = 8))
+        .awaitTermination(120000)
     def landed(): Set[Seq[Any]] = {
       spark.catalog.refreshByPath(out)
       spark.read.parquet(out).select("vec_id", "m", "code")
@@ -1299,24 +1187,16 @@ class StreamingSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     def wave(i: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === i)
-    def stageWave(i: Int): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-sbpe-w$i").toString
-      wave(i).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/wave$i.parquet"))
-    }
+    def stageWave(i: Int): Unit =
+      stage(src, s"wave$i", wave(i))
     def runOnce(): Unit =
-      graft.streaming.IndexStreams.ingestBpeWords(
-        spark.readStream.schema(docs.schema).parquet(src), state, ckpt)
+      VersionedState.ingest(
+        spark.readStream.schema(docs.schema).parquet(src), ckpt)(
+        graft.streaming.IndexStreams.bpeBatch(_, _, state))
         .awaitTermination(120000)
     def landedMerges() = {
       spark.catalog.refreshByPath(state)
-      graft.functions.Bpe.trainFromWords(
-          graft.streaming.IndexStreams.latestWordTable(spark, state),
-          rounds = 5)
+      graft.functions.Bpe.trainFromWords(latest(state), rounds = 5)
         ._2.orderBy("round").collect().map(_.toSeq).toSeq
     }
 
@@ -1356,18 +1236,12 @@ class StreamingSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     def wave(i: Int) = docs.filter(pmod(col("doc_id"), lit(2)) === i)
-    def stageWave(i: Int): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-squal-w$i").toString
-      wave(i).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/wave$i.parquet"))
-    }
+    def stageWave(i: Int): Unit =
+      stage(src, s"wave$i", wave(i))
     def runOnce(): Unit =
-      graft.streaming.MonitorStreams.ingestQuality(
-        spark.readStream.schema(docs.schema).parquet(src), state, ckpt)
+      VersionedState.ingest(
+        spark.readStream.schema(docs.schema).parquet(src), ckpt)(
+        graft.streaming.MonitorStreams.qualityBatch(_, _, state))
         .awaitTermination(120000)
     def landed() = {
       spark.catalog.refreshByPath(state)
@@ -1411,23 +1285,17 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("doc_id") % 17 === 0)
       .select("doc_id", "text")
     def wave(i: Int) = docs.filter(pmod(col("doc_id"), lit(2)) === i)
-    def stageWave(i: Int): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-snb-w$i").toString
-      wave(i).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/wave$i.parquet"))
-    }
+    def stageWave(i: Int): Unit =
+      stage(src, s"wave$i", wave(i))
     def runOnce(): Unit =
-      graft.streaming.IndexStreams.ingestNbCounts(
-        spark.readStream.schema(docs.schema).parquet(src), state, ckpt)
+      VersionedState.ingest(
+        spark.readStream.schema(docs.schema).parquet(src), ckpt)(
+        graft.streaming.IndexStreams.nbBatch(_, _, state))
         .awaitTermination(120000)
     import graft.functions.NaiveBayes
     def predictFromLanded(train: org.apache.spark.sql.DataFrame) = {
       spark.catalog.refreshByPath(state)
-      val c = graft.streaming.IndexStreams.latestNbCounts(spark, state)
+      val c = latest(state)
       NaiveBayes.classify(ho, NaiveBayes.model(c),
           NaiveBayes.classStats(c, train))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -1468,18 +1336,10 @@ class StreamingSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     val ev = graft.sources.Tables.events(spark, dir)
       .select("user_id", "event_type", "event_id")
-    def stage(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-scooc-$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
     def runOnce(): Unit =
-      graft.streaming.SketchStreams.ingestCooccurrence(
-        spark.readStream.schema(ev.schema).parquet(src), st, ckpt)
+      VersionedState.ingest(
+        spark.readStream.schema(ev.schema).parquet(src), ckpt)(
+        graft.streaming.SketchStreams.cooccurBatch(_, _, st))
         .awaitTermination(120000)
     def landed(): Set[(String, String, Long)] = {
       spark.catalog.refreshByPath(st)
@@ -1489,11 +1349,11 @@ class StreamingSpec extends AnyFunSuite {
     }
     // three arbitrary slices (co-occurrence folding needs no time
     // ordering — memberships are a set union)
-    stage("w0", ev.filter(col("event_id") % 3 === 0))
+    stage(src, "w0", ev.filter(col("event_id") % 3 === 0))
     runOnce()
-    stage("w1", ev.filter(col("event_id") % 3 === 1))
+    stage(src, "w1", ev.filter(col("event_id") % 3 === 1))
     runOnce()
-    stage("w2", ev.filter(col("event_id") % 3 === 2))
+    stage(src, "w2", ev.filter(col("event_id") % 3 === 2))
     runOnce()
     val ut = ev.select("user_id", "event_type").distinct()
     val want = ut.select(col("user_id"), col("event_type").as("ta"))
@@ -1528,33 +1388,27 @@ class StreamingSpec extends AnyFunSuite {
     val tbl = s"$base/tbl"
     val ckpt = s"$base/ckpt"
     new java.io.File(src).mkdirs()
-    def stage(name: String, rows: Seq[(Long, String, Long)]): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-smerge-$name").toString
-      rows.toDF("k", "status", "qty").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
+    def stageRows(name: String, rows: Seq[(Long, String, Long)]): Unit =
+      stage(src, name, rows.toDF("k", "status", "qty"))
     val schema = Seq((0L, "", 0L)).toDF("k", "status", "qty").schema
     def runOnce(): Unit =
-      graft.streaming.DimensionStreams.ingestMerge(
-        spark.readStream.schema(schema).parquet(src), tbl,
-        Seq("k"), ckpt,
-        deleteWhen = Some(col("status") === "DELETED"))
-        .awaitTermination(120000)
+      VersionedState.ingest(
+        spark.readStream.schema(schema).parquet(src), ckpt) {
+        (batch, batchId) =>
+          VersionedTable.mergeBatch(batch.sparkSession, tbl, batch,
+            Seq("k"), batchId,
+            deleteWhen = Some(col("status") === "DELETED")): Unit
+      }.awaitTermination(120000)
     def snapshot(): Set[(Long, String, Long)] =
       VersionedTable.read(spark, tbl).as[(Long, String, Long)]
         .collect().toSet
 
     // wave 0: bootstrap insert
-    stage("w0", Seq((1L, "NEW", 10L), (2L, "NEW", 20L)))
+    stageRows("w0", Seq((1L, "NEW", 10L), (2L, "NEW", 20L)))
     runOnce()
     assert(snapshot() == Set((1L, "NEW", 10L), (2L, "NEW", 20L)))
     // wave 1: update k=1, delete k=2, insert k=3
-    stage("w1", Seq((1L, "SHIPPED", 11L), (2L, "DELETED", 0L),
+    stageRows("w1", Seq((1L, "SHIPPED", 11L), (2L, "DELETED", 0L),
       (3L, "NEW", 30L)))
     runOnce()
     val want = Set((1L, "SHIPPED", 11L), (3L, "NEW", 30L))
@@ -1582,5 +1436,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(VersionedTable.readAsOf(spark, tbl, versionsBefore.head)
       .as[(Long, String, Long)].collect().toSet ==
         Set((1L, "NEW", 10L), (2L, "NEW", 20L)))
+  }
+
+  test("the committed-version reader skips a torn version: a crash " +
+    "mid-write of v=1 (only v=1/_temporary/ on disk) leaves q229's read " +
+    "on v=0") {
+    val st = java.nio.file.Files.createTempDirectory("graft-torn").toString
+    val ev = graft.sources.Tables.events(spark, dir)
+      .select("event_id", "value")
+    graft.streaming.MonitorStreams.binBatch(ev, 0L, st, "value",
+      binWidth = 10.0)
+    new java.io.File(s"$st/v=1/_temporary/0").mkdirs()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("bin").collect().map(_.toSeq).toSeq
+    val committed = rows(spark.read.parquet(s"$st/v=0"))
+    assert(committed.nonEmpty)
+    assert(rows(latest(st)) == committed)
   }
 }

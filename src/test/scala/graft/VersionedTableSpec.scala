@@ -110,9 +110,10 @@ class VersionedTableSpec extends AnyFunSuite {
         java.nio.file.Paths.get(s"$src/wave$i.parquet"))
     }
     def runOnce(): Unit =
-      VersionedTable.sink(
-        spark.readStream.schema(docs.schema).parquet(src), table, ckpt)
-        .awaitTermination(120000)
+      graft.streaming.VersionedState.ingest(
+        spark.readStream.schema(docs.schema).parquet(src), ckpt) {
+        (batch, batchId) => VersionedTable.appendAt(batch, table, batchId): Unit
+      }.awaitTermination(120000)
     stage(0); runOnce()
     stage(1); runOnce()
     spark.catalog.refreshByPath(table)
