@@ -385,9 +385,7 @@ object Hnsw {
     * immutable test tables (q138's folded index): re-running the
     * index-wide BFS + collect on EVERY query invocation re-derived the
     * same rows each time (the measured q138 1.61→2.10 s regression in
-    * r19). Same lifetime discipline as Tables.relCache/matCache:
-    * per-JVM, keyed on the live session, purged when sessions stop —
-    * nothing persists across runs. */
+    * r19). Lifetime: [[graft.sources.SessionMemo]]. */
   def certifiedEfOr(index: Dataset[HnswNode], fallbackEf: Int,
                     memoKey: Option[String]): Int = {
     val stats = reachStatsMemo(index, memoKey)
@@ -405,18 +403,13 @@ object Hnsw {
   /** Per-(session, key) certificate memo — see [[certifiedEfOr]]'s
     * memoKey overload. Values are the bounded per-shard stat rows
     * (ceil(n/16384) tuples), not query results. */
-  private val certCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      Array[(Int, Int, Int, Int)]]
+  private val certCache =
+    new graft.sources.SessionMemo[String, Array[(Int, Int, Int, Int)]]
 
   private def reachStatsMemo(index: Dataset[HnswNode],
                              memoKey: Option[String])
       : Array[(Int, Int, Int, Int)] = memoKey match {
-    case Some(k) =>
-      certCache.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(certCache.remove)
-      certCache.getOrElseUpdate((index.sparkSession, k),
-        shardReachStats(index))
+    case Some(k) => certCache(index.sparkSession, k)(shardReachStats(index))
     case None => shardReachStats(index)
   }
 

@@ -839,6 +839,10 @@ object CardQueries {
         // sq→tot self-join (2 extra lineitem-sized exchanges + a
         // double-executed scan subtree) collapses into a window sum.
         // isNotNull pins the old inner join's null-key drop.
+        // Skew caveat: repartition(l_partkey) puts the exchange BEFORE
+        // the partial aggregate, so there is no map-side combine and no
+        // AQE skew split — every row of a hot part key lands in one
+        // task. This shape was measured faster on uniform TPC-H keys.
         import org.apache.spark.sql.expressions.Window
         val sq = Tables.load(s, dir, "lineitem")
           .select(col("l_partkey"), col("l_suppkey"),

@@ -394,18 +394,6 @@ private[operators] object ExtensionShared {
         "doc_id", "text", shingleN = 3)
     }
 
-  /** Media payloads are STANDING DATA — a real pipeline decodes what
-    * storage already holds; it does not re-encode the corpus per query.
-    * Materialize the synthetic PNG/WAV/GVID payloads once per (session,
-    * dir) as parquet tables (opaque binary columns through real storage
-    * round-trips), so q69–q71 measure the decode operators themselves.
-    */
-  private[operators] def mediaTable(s: org.apache.spark.sql.SparkSession, dir: String,
-                         name: String)
-                        (build: => org.apache.spark.sql.DataFrame) =
-    Tables.memoTable(s, dir, name)(build)
-
-
   /** DuckDB replay of q207's k-core peel: `rounds` generated
     * peel blocks (degree → low set → anti-filtered edge set) over the
     * symmetrized near-dup edge list; monotone, so rounds past the

@@ -11,6 +11,9 @@ import ExtensionShared._
 
 /** Multimodal binary columns: PNG/WAV/GVID/MJPEG decode, perceptual hashes, media near-dup joins.
   *
+  * Media payloads are standing data, materialized once per (session,
+  * dir) with [[Tables.memoTable]], so the decode queries measure decoding.
+  *
   * One domain registry of the extension surface; composed (in the
   * original, order-stable sequence) by [[ExtensionQueries.all]].
   */
@@ -44,7 +47,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         graft.functions.Multimodal.decodeMedia(
-          mediaTable(s, dir, "media_mixed") {
+          Tables.memoTable(s, dir, "media_mixed") {
             graft.functions.Multimodal.syntheticMediaReal(s, dir).toDF()
           }.as[graft.functions.Multimodal.MediaRow])
           .toDF().orderBy("media_id")
@@ -91,7 +94,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         graft.functions.Multimodal.decodePngs(
-          mediaTable(s, dir, "media_png") {
+          Tables.memoTable(s, dir, "media_png") {
             graft.functions.Multimodal.syntheticPngs(s, dir).toDF()
           }.as[graft.functions.Multimodal.ImageRow])
           .toDF().orderBy("media_id")
@@ -118,7 +121,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         graft.functions.Multimodal.decodeWavs(
-          mediaTable(s, dir, "media_wav") {
+          Tables.memoTable(s, dir, "media_wav") {
             graft.functions.Multimodal.syntheticWavs(s, dir).toDF()
           }.as[graft.functions.Multimodal.AudioRow])
           .toDF().orderBy("media_id")
@@ -141,7 +144,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         graft.functions.Multimodal.sampleGvidFrames(
-          mediaTable(s, dir, "media_gvid") {
+          Tables.memoTable(s, dir, "media_gvid") {
             graft.functions.Multimodal.syntheticGvids(s, dir).toDF()
           }.as[graft.functions.Multimodal.VideoRow], every = 2)
           .toDF().orderBy("media_id", "frame_idx")
@@ -177,7 +180,7 @@ object MediaQueries {
       (s, dir) => {
         import s.implicits._
         graft.functions.Multimodal.sampleAviFrames(
-          mediaTable(s, dir, "media_avi") {
+          Tables.memoTable(s, dir, "media_avi") {
             graft.functions.Multimodal.syntheticMjpegAvis(s, dir).toDF()
           }.as[graft.functions.Multimodal.AviRow], every = 2)
           .toDF()
@@ -208,7 +211,7 @@ object MediaQueries {
       // source-data materialization, not operator work); the decode +
       // hash is what this query measures
       (s, dir) => graft.functions.Multimodal.imageAHash(
-          mediaTable(s, dir, "gradient_pngs") {
+          Tables.memoTable(s, dir, "gradient_pngs") {
             graft.functions.Multimodal.syntheticGradientPngs(s, dir)
               .toDF()
           }.as[graft.functions.Multimodal.ImageRow](
@@ -233,7 +236,7 @@ object MediaQueries {
       (s, dir) => graft.functions.Multimodal.imageNearDupPairs(
           Tables.memoTable(s, dir, "image_ahash") {
             graft.functions.Multimodal.imageAHash(
-              mediaTable(s, dir, "gradient_pngs") {
+              Tables.memoTable(s, dir, "gradient_pngs") {
                 graft.functions.Multimodal
                   .syntheticGradientPngs(s, dir).toDF()
               }.as[graft.functions.Multimodal.ImageRow](
@@ -259,7 +262,7 @@ object MediaQueries {
 
     Q("q162_audio_fingerprint",
       (s, dir) => graft.functions.Multimodal.audioFingerprint(
-          mediaTable(s, dir, "stepped_wavs") {
+          Tables.memoTable(s, dir, "stepped_wavs") {
             graft.functions.Multimodal.syntheticSteppedWavs(s, dir)
               .toDF()
           }.as[graft.functions.Multimodal.AudioRow](
@@ -280,7 +283,7 @@ object MediaQueries {
       (s, dir) => graft.functions.Multimodal.imageNearDupPairs(
           Tables.memoTable(s, dir, "audio_fp") {
             graft.functions.Multimodal.audioFingerprint(
-              mediaTable(s, dir, "stepped_wavs") {
+              Tables.memoTable(s, dir, "stepped_wavs") {
                 graft.functions.Multimodal
                   .syntheticSteppedWavs(s, dir).toDF()
               }.as[graft.functions.Multimodal.AudioRow](
@@ -322,7 +325,7 @@ object MediaQueries {
         graft.functions.Multimodal.imageNearDupPairs(
             Tables.memoTable(s, dir, "audio_fp") {
               graft.functions.Multimodal.audioFingerprint(
-                mediaTable(s, dir, "stepped_wavs") {
+                Tables.memoTable(s, dir, "stepped_wavs") {
                   graft.functions.Multimodal
                     .syntheticSteppedWavs(s, dir).toDF()
                 }.as[graft.functions.Multimodal.AudioRow](
@@ -350,7 +353,7 @@ object MediaQueries {
 
     Q("q164_video_frame_hashes",
       (s, dir) => graft.functions.Multimodal.videoFrameHashes(
-          mediaTable(s, dir, "gradient_gvids") {
+          Tables.memoTable(s, dir, "gradient_gvids") {
             graft.functions.Multimodal.syntheticGradientGvids(s, dir)
               .toDF()
           }.as[graft.functions.Multimodal.VideoRow](
@@ -371,7 +374,7 @@ object MediaQueries {
       (s, dir) => graft.functions.Multimodal.videoNearDupPairs(
           Tables.memoTable(s, dir, "video_frame_hashes") {
             graft.functions.Multimodal.videoFrameHashes(
-              mediaTable(s, dir, "gradient_gvids") {
+              Tables.memoTable(s, dir, "gradient_gvids") {
                 graft.functions.Multimodal
                   .syntheticGradientGvids(s, dir).toDF()
               }.as[graft.functions.Multimodal.VideoRow](

@@ -26,17 +26,15 @@ object ParityQueries {
     * FRESH QueryExecution (fresh optimize/plan/execute, nothing cached, no
     * shuffle-output reuse). Cuts the per-call parse/analyze overhead of the
     * big re-dialected SQL (~0.2s measured on q16's 5-view tree) without
-    * touching what the benchmark measures: the execution itself. */
-  private val preparedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String),
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    * touching what the benchmark measures: the execution itself.
+    * Lifetime: [[graft.sources.SessionMemo]]. */
+  private val preparedCache = new graft.sources.SessionMemo[(String, String),
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
 
   private[operators] def prepared(key: String)
       (build: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = (s, dir) => {
-    preparedCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(preparedCache.remove)
-    val plan = preparedCache.getOrElseUpdate((s, dir, key),
+    val plan = preparedCache(s, (dir, key))(
       org.apache.spark.sql.graftops.ColumnBridge.analyzed(build(s, dir)))
     org.apache.spark.sql.graftops.ColumnBridge.ofRows(s, plan)
   }

@@ -39,15 +39,10 @@ object Quality {
     Rule("MISSING_INVENTORY", "MEDIUM",
       Procurement.missingInventory(orders, inventory, d)))
 
-  /** Extra rules a production pipeline would add (modelled, tested):
-    * negative/zero quantities and inventory snapshots where reserved
-    * exceeds available. */
+  /** Extra rule a production pipeline would add (modelled, tested):
+    * negative/zero quantities. */
   def nonPositiveQuantity(orders: DataFrame): DataFrame =
     orders.filter(col("quantity") <= 0).select("product_id").distinct()
-
-  def reservedExceedsAvailable(inventory: DataFrame): DataFrame =
-    inventory.filter(col("reserved_qty") > col("available_qty"))
-      .select("product_id").distinct()
 
   /** A declarative TABLE-level constraint: `metric` is any aggregate
     * expression over the table reduced to one int64 (fractions in basis

@@ -25,50 +25,17 @@ import org.apache.spark.storage.StorageLevel
   * on-disk catalog tables, which don't occupy the executor storage pool.
   */
 object Standing {
-  /** Holder whose `lazy val` IS the at-most-once guard: JVM lazy-val
-    * initialization is synchronized, so even when several callers race
-    * putIfAbsent, only the registered holder's thunk ever runs — and
-    * runs once. This matters beyond the persisted frame itself: builder
-    * thunks with eager side effects (mmrPoolTop / mmrPoolSim /
-    * clustersTable all localCheckpoint inside) would otherwise leave
-    * loser-built checkpoint RDD blocks that a top-level unpersist can't
-    * reach, lingering until ContextCleaner GC. A thunk that THROWS
-    * leaves the lazy val uninitialized (Scala retries on next access),
-    * so a transient build failure doesn't poison the registry entry.
-    */
-  private final class Entry(build: () => DataFrame) {
-    lazy val df: DataFrame =
-      build().persist(StorageLevel.MEMORY_AND_DISK)
-    // unpersist only if the thunk actually ran — releasing a never-
-    // forced entry must not trigger the build it exists to skip
-    @volatile private var forced = false
-    def force(): DataFrame = { val d = df; forced = true; d }
-    def releaseIfBuilt(blocking: Boolean): Unit =
-      if (forced) df.unpersist(blocking)
-  }
-
-  private val frames = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Entry]
+  /** Lifetime and build-once: [[SessionMemo]] — builders localCheckpoint
+    * inside (mmrPoolTop, clustersTable), so a duplicate build would leave
+    * checkpoint blocks no unpersist reaches. */
+  private val frames = new SessionMemo[(String, String), DataFrame]
 
   /** Build-once accessor: first call per (session, dir, name) runs
     * `build`, persists MEMORY_AND_DISK and registers the frame; later
-    * calls return the registered frame. Entries of stopped sessions are
-    * swept on every call (same discipline as Tables.load).
-    *
-    * Concurrent first access races through putIfAbsent on an UNFORCED
-    * lazy holder — registration is side-effect-free, and only the
-    * winning holder's thunk is ever forced. (A plain getOrElseUpdate,
-    * or putIfAbsent of an eagerly-built frame, runs the thunk in every
-    * racing caller; losers' persisted frames AND any eager
-    * localCheckpoint blocks inside the thunk would linger unowned.)
-    */
+    * calls return the registered frame. */
   def frame(spark: SparkSession, dir: String, name: String)
-           (build: => DataFrame): DataFrame = {
-    frames.keys.filter(_._1.sparkContext.isStopped).foreach(frames.remove)
-    val key = (spark, dir, name)
-    val mine = new Entry(() => build)
-    frames.putIfAbsent(key, mine).getOrElse(mine).force()
-  }
+           (build: => DataFrame): DataFrame =
+    frames(spark, (dir, name))(build.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Release every standing frame registered for (session, dir):
     * blocking unpersist (the storage pool is actually free when this
@@ -76,28 +43,22 @@ object Standing {
     * registry removal, so the next [[frame]] call rebuilds. Returns the
     * number of frames released.
     */
-  def release(spark: SparkSession, dir: String): Int = {
-    val keys = frames.keys.filter(k => k._1 == spark && k._2 == dir).toSeq
-    keys.foreach { k =>
-      frames.remove(k).foreach(_.releaseIfBuilt(blocking = true))
-    }
-    keys.size
-  }
+  def release(spark: SparkSession, dir: String): Int =
+    unpersist(frames.remove(spark)(_._1 == dir))
 
   /** Release all standing frames for a session, any dir. */
-  def releaseAll(spark: SparkSession): Int = {
-    val keys = frames.keys.filter(_._1 == spark).toSeq
-    keys.foreach { k =>
-      frames.remove(k).foreach(_.releaseIfBuilt(blocking = true))
-    }
-    keys.size
+  def releaseAll(spark: SparkSession): Int =
+    unpersist(frames.remove(spark)(_ => true))
+
+  private def unpersist(released: Seq[DataFrame]): Int = {
+    released.foreach(_.unpersist(blocking = true))
+    released.size
   }
 
   /** Registered frame names for a (session, dir) — introspection for
     * specs and reports. */
   def registered(spark: SparkSession, dir: String): Seq[String] =
-    frames.keys.collect { case (s, d, n) if s == spark && d == dir => n }
-      .toSeq.sorted
+    frames.keys(spark).collect { case (d, n) if d == dir => n }.sorted
 
   /** Bytes currently held by the session's block-manager storage pool
     * (memory, disk) across ALL persisted RDDs — the standing frames plus

@@ -27,11 +27,9 @@ object Tables {
     * Contract: the memo assumes the files at a path never change for the
     * life of the session (true for the driver's test tables); mutable
     * data should go through the catalog (Catalog.scala), whose refresh
-    * handles invalidation. Entries of stopped sessions are purged on the
-    * next load so a long-lived JVM cycling sessions doesn't retain them.
+    * handles invalidation. Lifetime: [[SessionMemo]].
     */
-  private val relCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val relCache = new SessionMemo[String, DataFrame]
 
   /** Materialize-once: builds `build` a single time per (session, dir,
     * name), saves it as a Parquet catalog table (optionally bucketed,
@@ -46,17 +44,16 @@ object Tables {
     * so no (dir, name) pair can alias another) because the readable
     * prefix's character normalization is lossy. The path is per-JVM: a
     * fixed shared location would let a second JVM's mode-overwrite delete
-    * files this JVM's catalog relation is still reading.
+    * files this JVM's catalog relation is still reading. Lifetime and
+    * the at-most-once build (no two racing `saveAsTable`s on one path):
+    * [[SessionMemo]].
     */
-  private val matCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, String), DataFrame]
+  private val matCache = new SessionMemo[(String, String), DataFrame]
 
   def memoTable(spark: SparkSession, dir: String, name: String,
                 bucketCols: Seq[String] = Nil)
-               (build: => DataFrame): DataFrame = {
-    matCache.keys.filter(_._1.sparkContext.isStopped).foreach(matCache.remove)
-    matCache.getOrElseUpdate((spark, dir, name), {
+               (build: => DataFrame): DataFrame =
+    matCache(spark, (dir, name)) {
       val raw = dir + "\u0000" + name
       val safe = s"${dir}_$name".replaceAll("[^A-Za-z0-9]", "_")
       val fp = java.security.MessageDigest.getInstance("MD5")
@@ -78,15 +75,12 @@ object Tables {
         spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS")
       }
       spark.table(table)
-    })
-  }
+    }
 
   /** One Parquet file/dir per table: `<dir>/<name>.parquet`. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    relCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(relCache.remove)
-    relCache.getOrElseUpdate((spark, s"$dir/$name.parquet"),
-      spark.read.parquet(s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    relCache(spark, path)(spark.read.parquet(path))
   }
 
   /** Scale-adaptive parallelism floor for CPU-dense per-row kernels

@@ -2,6 +2,9 @@ package graft
 
 import java.time.LocalDate
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan guards: the scale-critical plan properties stay true as
@@ -9,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * for the top-1 ranking, pushed filters on the fact scan, whole-stage
   * codegen coverage.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
 
   val dir = "/root/testdata/sf0.001"
@@ -17,6 +20,10 @@ class PlanSpec extends AnyFunSuite {
   def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir)
       .queryExecution.executedPlan.toString
+
+  /** Shuffle exchanges in a physical plan, looking inside AQE wrappers. */
+  def shuffles(p: SparkPlan): Int =
+    collect(p) { case s: ShuffleExchangeLike => s }.size
 
   test("q03 net demand: all four joins broadcast; top-1 uses " +
     "WindowGroupLimit; no sort-merge join") {
@@ -80,14 +87,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("repetition metrics are map-side: no explode, no aggregation " +
     "exchange — the only shuffle is the presentation sort") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val qe = SparkEntry.queries("q60_repetition_metrics")(spark, dir)
       .queryExecution
     val p = qe.sparkPlan
-    def shuffles(n: SparkPlan): Int =
-      (if (n.isInstanceOf[ShuffleExchangeLike]) 1 else 0) +
-        n.children.map(shuffles).sum
     // at most the ORDER BY's range exchange (none at all when the tiny
     // test scan is a single partition)
     assert(shuffles(p) <= 1, p.toString.take(2000))
@@ -131,13 +133,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("quality-filter verdict is one map-side pass: no Generate, no " +
     "aggregation exchange — at most the presentation sort shuffles") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val p = SparkEntry.queries("q72_quality_filter")(spark, dir)
       .queryExecution.sparkPlan
-    def shuffles(n: SparkPlan): Int =
-      (if (n.isInstanceOf[ShuffleExchangeLike]) 1 else 0) +
-        n.children.map(shuffles).sum
     assert(shuffles(p) <= 1, p.toString.take(2000))
     assert(!p.toString.contains("Generate"), p.toString.take(2000))
   }
@@ -200,15 +197,22 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sliding windows are pure map-side: zero exchanges, zero joins") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val docs = graft.sources.Tables.load(spark, dir, "documents")
     val p = graft.functions.Mixing.slidingWindows(docs, 32, 24)
       .queryExecution.sparkPlan
-    def shuffles(n: org.apache.spark.sql.execution.SparkPlan): Int =
-      (n match { case _: ShuffleExchangeLike => 1; case _ => 0 }) +
-        n.children.map(shuffles).sum
     assert(shuffles(p) == 0, p.toString.take(2000))
     assert(!p.toString.contains("Join"), p.toString.take(2000))
+  }
+
+  test("q101 incremental clusters: the batch pair frame is materialized " +
+    "once, so the executed plan holds a bounded number of shuffles") {
+    // Dedup.applyClusterBatch checkpoints the batch pair frame; without
+    // it the LSH probe chain re-plans under each of its three consumers
+    val p = SparkEntry.queries("q101_incremental_clusters")(spark, dir)
+      .queryExecution.executedPlan
+    val n = shuffles(p)
+    // 2 on this data: the fresh-endpoint distinct and the final sort
+    assert(n <= 2, s"$n shuffle exchanges:\n${p.toString.take(3000)}")
   }
 
   test("q103's range-join aggregate plans with NO nested-loop or " +

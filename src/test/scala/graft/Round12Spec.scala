@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Standing, VersionedTable}
+import graft.sources.{Standing, Tables, VersionedTable}
 
 /** Round-12 items: the intra-run spread canary + calibration-normalized
   * canary fields, the committed-baseline read (`git show`), the
-  * Standing build-at-most-once guard, and appendAt's no-delete retry. */
+  * build-at-most-once guard (Standing, memoTable), and appendAt's
+  * no-delete retry. */
 class Round12Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -56,25 +58,48 @@ class Round12Spec extends AnyFunSuite {
 
   // --- Standing: build-at-most-once ---------------------------------------
 
-  test("Standing.frame runs the build thunk at most once under " +
-    "concurrent first access (eager side effects inside thunks must " +
-    "not duplicate)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-r12-once").toString
-    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val threads = (0 until 8).map { _ =>
-      new Thread(() => {
-        Standing.frame(spark, dir, "once") {
-          builds.incrementAndGet()
-          Thread.sleep(50) // widen the race window
-          Seq((1L, "x")).toDF("k", "v")
-        }: Unit
-      })
+  // One race, every build-once owner: 8 threads hit the same key first,
+  // the build counts and sleeps to widen the window. Each case is the
+  // owner's accessor plus its cleanup.
+  private val buildOnceOwners
+      : Seq[(String, (String, () => DataFrame) => DataFrame, String => Unit)] =
+    Seq(
+      ("Standing.frame",
+        (dir, build) => Standing.frame(spark, dir, "once")(build()),
+        dir => assert(Standing.release(spark, dir) == 1)),
+      // at-most-once here means no two racing saveAsTable(overwrite)
+      // calls on one catalog path
+      ("Tables.memoTable",
+        (dir, build) => Tables.memoTable(spark, dir, "once")(build()),
+        _ => ()))
+
+  buildOnceOwners.foreach { case (owner, access, cleanup) =>
+    test(s"$owner runs the build thunk at most once under " +
+      "concurrent first access (eager side effects inside thunks must " +
+      "not duplicate)") {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-r12-once").toString
+      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val build = () => {
+        builds.incrementAndGet()
+        Thread.sleep(50) // widen the race window
+        Seq((1L, "x")).toDF("k", "v")
+      }
+      val threads = (0 until 8).map { _ =>
+        new Thread(() =>
+          try { access(dir, build); () }
+          catch { case e: Throwable => errors.add(e); () })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(builds.get() == 1,
+        s"thunk ran ${builds.get()} times; lazy-holder guard must cap at 1")
+      assert(errors.isEmpty, s"racing callers threw: $errors")
+      val built = access(dir, () => fail("must be cached"))
+      assert(built.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+        == Seq((1L, "x")))
+      cleanup(dir)
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    assert(builds.get() == 1,
-      s"thunk ran ${builds.get()} times; lazy-holder guard must cap at 1")
-    assert(Standing.release(spark, dir) == 1)
   }
 
   test("Standing.frame retries a build whose thunk threw (a transient " +
