@@ -24,13 +24,8 @@ object Bench {
     // fixed-core bench the config has to). Default stays = cpus for
     // the sf0.1/sf1 rounds so numbers remain comparable.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.tool(cpus.toInt)
+      .config("spark.sql.shuffle.partitions", shuffle).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     quietBoundedWindowWarnings()
 
@@ -41,30 +36,12 @@ object Bench {
     // human watches a slow run (the r15 q185 spill was found that way);
     // a shuffle-bytes column makes an sf1/sf0.1 movement ratio
     // mechanically comparable for every query at every scale.
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-            ()
-          }
-        }
-      })
-    def shuffleSnap(): (Long, Long, Long) =
-      (shufRead.get(), shufWrite.get(), spillBytes.get())
-    // (read, write, spill) deltas observed during each query's pass-1
+    val counters = TaskCounters.register(spark)
+    // Counter deltas observed during each query's pass-1
     // window. Listener events land asynchronously; the gcBarrier before
     // every window plus a short post-run drain keep attribution smear
     // to single-task granularity — decision-grade for movement ratios.
-    val shuffleByQuery =
-      scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+    val shuffleByQuery = scala.collection.mutable.Map.empty[String, TaskCounts]
 
     // Failures are TRACKED, not just swallowed: a query that regresses
     // into a crash times near-zero and would otherwise read as a
@@ -157,18 +134,16 @@ object Bench {
     var captureShuffle = false
     def timed(name: String): Double = {
       gcBarrier(if (iterative(name)) 200 else 100)
-      val s0 = if (captureShuffle) Some(shuffleSnap()) else None
+      val s0 = if (captureShuffle) Some(counters.snapshot()) else None
       val t0 = System.nanoTime()
       run(name)
       val sec = (System.nanoTime() - t0) / 1e9
-      s0.foreach { case (r0, w0, p0) =>
+      s0.foreach { c0 =>
         // wait for the listener bus to actually drain (a fixed sleep is
         // a race with a constant: queries with large task counts lost
         // tail task-end events into the next query's delta)
-        org.apache.spark.graft.ListenerDrain
-          .waitUntilEmpty(spark.sparkContext, 5000): Unit
-        val (r1, w1, p1) = shuffleSnap()
-        shuffleByQuery(name) = (r1 - r0, w1 - w0, p1 - p0)
+        counters.drain()
+        shuffleByQuery(name) = counters.snapshot() - c0
       }
       sec
     }
@@ -483,7 +458,7 @@ object Bench {
       .collect { case s if s > 0 => fmt(calibEnd / s) }.getOrElse("null")
     // bytes-moved-per-query maps (pass-1 windows; standing memos warm
     // when the warmup pass ran, cold on SPARK_GRAFT_WARMUP=0 runs)
-    def bytesJson(sel: ((Long, Long, Long)) => Long): String = names
+    def bytesJson(sel: TaskCounts => Long): String = names
       .flatMap(n => shuffleByQuery.get(n)
         .map(t => "\"" + n + "\":" + sel(t)))
       .mkString("{", ",", "}")
@@ -533,9 +508,9 @@ object Bench {
       s""""calib_end_vs_steady":$calibVsSteadyJson,""" +
       s""""calib_gate_max_ratio":${fmt(CalibGateMaxRatio)},""" +
       s""""canonical":$canonical,""" +
-      s""""shuffle_read_bytes":${bytesJson(_._1)},""" +
-      s""""shuffle_write_bytes":${bytesJson(_._2)},""" +
-      s""""spilled_bytes":${bytesJson(_._3)},""" +
+      s""""shuffle_read_bytes":${bytesJson(_.shuffleRead)},""" +
+      s""""shuffle_write_bytes":${bytesJson(_.shuffleWrite)},""" +
+      s""""spilled_bytes":${bytesJson(_.spill)},""" +
       s""""rebases":$rebases,""" +
       s""""writes":$ws,"partitioned_files":$nFiles,""" +
       s""""partitioned_bytes":$nBytes,"calib_start":${fmt(calibStart)},""" +

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Isolation timer: run ONLY the named queries (same session shape and
   * materialization as [[Bench]] — warmup, then min-of-3) and print one
   * JSON line per query. The tool the r9 q61 / r10 q185 investigations
@@ -17,53 +15,16 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchOne <queryName> [...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.tool(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Bench.quietBoundedWindowWarnings()
-    // same data-movement listener as Bench: isolation runs answer
-    // "does the fix hold" questions, and for the spill class the
-    // decisive number is spilled bytes, not seconds
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong
-    // job/stage/task counts per timed pass: the decomposition the
-    // streamed-wave family needs — their residual cost is per-JOB fixed
+    // Bench's data-movement counters, plus job/stage/task counts per
+    // timed pass: isolation runs answer "does the fix hold" questions,
+    // and for the spill class the decisive number is spilled bytes, not
+    // seconds; the streamed-wave family's residual cost is per-JOB fixed
     // overhead (scheduling, commit protocol), invisible in bytes/seconds
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    val stageCount = new java.util.concurrent.atomic.AtomicLong
-    val taskCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCount.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler
-              .SparkListenerStageCompleted): Unit = {
-          stageCount.incrementAndGet(); ()
-        }
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          taskCount.incrementAndGet()
-          val m = te.taskMetrics
-          if (m != null) {
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-            ()
-          }
-        }
-      })
-    def drain(): Unit = org.apache.spark.graft.ListenerDrain
-      .waitUntilEmpty(spark.sparkContext, 5000): Unit
+    val counters = TaskCounters.register(spark)
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count(): Unit
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -74,28 +35,25 @@ object BenchOne {
       val tc0 = System.nanoTime()
       run(name)
       val cold = (System.nanoTime() - tc0) / 1e9
-      drain()
-      val (r0, w0, p0) = (shufRead.get, shufWrite.get, spillBytes.get)
-      val (j0, s0, t0c) = (jobCount.get, stageCount.get, taskCount.get)
+      counters.drain()
+      val c0 = counters.snapshot()
       val obs = (1 to 3).map { _ =>
         System.gc(); Thread.sleep(200)
         val t0 = System.nanoTime()
         run(name)
         (System.nanoTime() - t0) / 1e9
       }
-      drain()
+      counters.drain()
       // bytes are per timed PASS (the 3-run total divided by 3) so the
       // numbers compare directly with Bench's per-query deltas
-      val (dr, dw, dp) = (shufRead.get - r0, shufWrite.get - w0,
-        spillBytes.get - p0)
-      val (dj, ds, dt) = (jobCount.get - j0, stageCount.get - s0,
-        taskCount.get - t0c)
+      val d = counters.snapshot() - c0
       s"""{"query":"$name","min":${fmt(obs.min)},"max":${fmt(obs.max)},""" +
         s""""cold":${fmt(cold)},""" +
-        s""""shuffle_read_bytes":${dr / 3},""" +
-        s""""shuffle_write_bytes":${dw / 3},""" +
-        s""""spilled_bytes":${dp / 3},""" +
-        s""""jobs":${dj / 3},"stages":${ds / 3},"tasks":${dt / 3},""" +
+        s""""shuffle_read_bytes":${d.shuffleRead / 3},""" +
+        s""""shuffle_write_bytes":${d.shuffleWrite / 3},""" +
+        s""""spilled_bytes":${d.spill / 3},""" +
+        s""""jobs":${d.jobs / 3},"stages":${d.stages / 3},""" +
+        s""""tasks":${d.tasks / 3},""" +
         s""""sf":"$sfDir"}"""
     }
     spark.stop()

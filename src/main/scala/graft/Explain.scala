@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of one
   * registered query (or all) so shuffle count, exchange reuse, pushed
   * filters, and whole-stage-codegen spans can be iterated on without a
@@ -22,13 +20,8 @@ object Explain {
     val name = rest.headOption.getOrElse("all")
     val sfDir =
       if (rest.length > 1) rest(1) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.tool(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (name == "all") SparkEntry.queries.keys.toSeq.sorted

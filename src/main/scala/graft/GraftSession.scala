@@ -27,6 +27,10 @@ object GraftSession {
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .withExtensions(new GraftExtensions)
 
+  /** [[builder]] for graft's command-line mains: `local[cpus]`, UI off. */
+  private[graft] def tool(cpus: Int): SparkSession.Builder =
+    builder(s"local[$cpus]", cpus).config("spark.ui.enabled", "false")
+
   /** Literal-int argument of a SQL call (n-gram size, hash count, …). */
   private def litInt(e: Expression, what: String): Int = e match {
     case l if l.foldable =>
@@ -133,7 +137,7 @@ object GraftSession {
     new ExpressionInfo(cls.getName, name)
 
   /** Register graft's native SQL functions on an existing session (for
-    * sessions created elsewhere, e.g. the driver's Verify/Bench). */
+    * sessions built outside graft, without GraftExtensions). */
   def registerFunctions(spark: SparkSession): Unit =
     functions.foreach { case (name, cls, builder) =>
       spark.sessionState.functionRegistry.registerFunction(

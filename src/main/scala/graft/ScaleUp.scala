@@ -29,6 +29,8 @@ import org.apache.spark.sql.functions._
   *  - events: user_id/event_id offset per replica (sessions never merge
   *    across replicas), timestamps kept (the event stream densifies
   *    10× per hour — the realistic shape of more traffic).
+  *
+  * The driver heap comes from `SPARK_DRIVER_MEM` (build.sbt's `-Xmx`).
   */
 object ScaleUp {
 
@@ -41,13 +43,9 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "target/sf1"
     val n = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .appName("graft-scaleup")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.tool(cpus).appName("graft-scaleup")
+      .config("spark.sql.shuffle.partitions", "32").getOrCreate()
     try write(spark, src, out, n)
     finally spark.stop()
   }

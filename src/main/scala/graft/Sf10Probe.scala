@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** 100×-direction evidence: single-pass cold timings of the
   * scale-sensitive query tier on an sf10 tree (100× the sf0.1 driver
   * data, built by [[ScaleUp]] with n=100), written as a committed JSON
@@ -99,7 +97,7 @@ object Sf10Probe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val budget = sys.env.getOrElse("SF10_BUDGET_SEC", "300").toDouble
     // Cold rows of WarmSplit queries carry a one-time standing build
     // (amortized over every probe in production) — generous, but GATED:
@@ -117,14 +115,9 @@ object Sf10Probe {
     // fixed-core probe the config has to (AQE merges small partitions
     // but never splits an oversized non-skew-join partition).
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      (cpus.toInt * 4).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      (cpus * 4).toString)
+    val spark = GraftSession.tool(cpus)
+      .config("spark.sql.shuffle.partitions", shuffle).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Bench.quietBoundedWindowWarnings()
     // Contention telemetry (r18): the r17 probe's two over-budget rows
@@ -135,7 +128,7 @@ object Sf10Probe {
     // artifact cannot distinguish "operator regressed 2×" from "box is
     // 2× contended today"; with them the comparison is machine-readable
     // (the Bench discipline since r8, adopted here).
-    val calibStart = Bench.fixedLoadCalib(spark, cpus.toInt)
+    val calibStart = Bench.fixedLoadCalib(spark, cpus)
 
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     def fmt(v: Double): String =
@@ -167,7 +160,7 @@ object Sf10Probe {
       if (WarmSplit(name)) Seq(cold, timedRun(name, s"${name}_warm"))
       else Seq(cold)
     }
-    val calibEnd = Bench.fixedLoadCalib(spark, cpus.toInt)
+    val calibEnd = Bench.fixedLoadCalib(spark, cpus)
     spark.stop()
     // Per-query budget overrides ride BASELINE_REBASES.json (entries
     // with "baseline":"BENCH_sf10_subset.json" and a "budget_sec" —

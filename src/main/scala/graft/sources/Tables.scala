@@ -109,10 +109,11 @@ object Tables {
     * only reads as a long via spark.sql.legacy.parquet.nanosAsLong) and,
     * currently, TIMESTAMP(MICROS) without timezone annotation (read as
     * TIMESTAMP_NTZ). This accessor hides the drift: every consumer sees
-    * `ts` as plain TimestampType, whichever encoding is on disk. All graft
-    * entry points pin spark.sql.session.timeZone=UTC, so the NTZ→timestamp
-    * cast is wall-clock-preserving and epoch arithmetic (`cast(ts as
-    * long)`, `unix_timestamp`) agrees with the DuckDB oracle's `epoch()`.
+    * `ts` as plain TimestampType, whichever encoding is on disk. Every
+    * entry point's session comes from GraftSession.builder, which pins
+    * spark.sql.session.timeZone=UTC, so the NTZ→timestamp cast keeps wall
+    * clock and epoch arithmetic (`cast(ts as long)`, `unix_timestamp`)
+    * agrees with the DuckDB oracle's `epoch()`.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

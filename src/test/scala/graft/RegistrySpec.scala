@@ -29,6 +29,18 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }
 
+  test("every entry point builds its session through GraftSession") {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val builders = try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains("SparkSession.builder("))
+      .map(_.getFileName.toString).toSeq.sorted
+    finally walk.close()
+    assert(builders == Seq("GraftSession.scala"),
+      s"SparkSession.builder( outside GraftSession: $builders")
+  }
+
   test("DESCRIBE FUNCTION reports each kernel's real implementing class") {
     val spark = TestSpark.spark
     GraftSession.registerFunctions(spark)

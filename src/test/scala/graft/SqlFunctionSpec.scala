@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native expression surface exposed to SQL users via
@@ -7,6 +8,18 @@ import org.scalatest.funsuite.AnyFunSuite
 class SqlFunctionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Runs `body` on a fresh session with the fusion rules attached. All
+    * suites share TestSpark.spark in one JVM, so attaching them there would
+    * leak them into every suite that runs later. */
+  private def withFusion(body: SparkSession => Unit): Unit = {
+    val before = spark.experimental.extraOptimizations
+    val fused = spark.newSession()
+    GraftSession.attachOptimizations(fused)
+    body(fused)
+    assert(spark.experimental.extraOptimizations == before,
+      "fusion rules leaked into the shared TestSpark session")
+  }
 
   test("cosine_similarity callable from SQL; codegen and eval agree") {
     GraftSession.registerFunctions(spark)
@@ -71,12 +84,11 @@ class SqlFunctionSpec extends AnyFunSuite {
   }
 
   test("optimizer fusion rewrites size(array_intersect) over shingle " +
-    "hashes into the merge-scan kernel") {
+    "hashes into the merge-scan kernel") { withFusion { fusedSpark =>
     import org.apache.spark.sql.functions._
-    GraftSession.attachOptimizations(spark)
     // parquet-backed source: a literal input would be constant-folded to
     // a LocalRelation before the fused expression could be observed
-    val docs = spark.read
+    val docs = fusedSpark.read
       .parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
     val fused = docs.select($"doc_id", size(array_intersect(
       graft.functions.Dedup.shingleHashesFast($"text", 3),
@@ -98,13 +110,12 @@ class SqlFunctionSpec extends AnyFunSuite {
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(m(fused) == m(unfused))
-  }
+  }}
 
   test("optimizer fusion rewrites the HOF cosine formulation into the " +
     "fused kernel; values identical incl. unequal-length and null-element " +
-    "NULL rows") {
+    "NULL rows") { withFusion { fusedSpark =>
     import org.apache.spark.sql.functions._
-    GraftSession.attachOptimizations(spark)
     // parquet-backed (a literal frame would be folded to a LocalRelation
     // before the fusion could be observed); row 4's unequal lengths and
     // row 5's null element both hit the rewrite's NULL branch
@@ -124,7 +135,7 @@ class SqlFunctionSpec extends AnyFunSuite {
       df.select(col("id"), graft.functions.Similarity
         .cosineHof(col("a"), col("b")).as("sim"))
 
-    val fused = hofCosine(spark.read.parquet(path))
+    val fused = hofCosine(fusedSpark.read.parquet(path))
     assert(fused.queryExecution.optimizedPlan.toString
       .contains("cosine_similarity"))
 
@@ -142,12 +153,12 @@ class SqlFunctionSpec extends AnyFunSuite {
     assert(f(4L).isEmpty)       // unequal lengths → NULL, both forms
     assert(f(5L).isEmpty)       // null element → NULL, both forms
     assert(f(1L).contains(1.0)) // bit-equal, not approximate
-  }
+  }}
 
   test("HOF cosine fusion does NOT fire on non-double (float) arrays") {
+    withFusion { fusedSpark =>
     import org.apache.spark.sql.functions._
-    GraftSession.attachOptimizations(spark)
-    val emb = spark.read
+    val emb = fusedSpark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet").limit(10)
     // float arrays: the HOF form multiplies floats (different rounding
     // than the all-double kernel), so the rule must leave them alone
@@ -155,7 +166,7 @@ class SqlFunctionSpec extends AnyFunSuite {
       .cosineHof(col("embedding"), col("embedding")).as("sim"))
       .queryExecution.optimizedPlan.toString
     assert(!p.contains("cosine_similarity"), p.take(1500))
-  }
+  }}
 
   test("aggregate and census kernels callable from SQL") {
     import org.apache.spark.sql.functions._
