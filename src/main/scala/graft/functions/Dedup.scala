@@ -400,12 +400,7 @@ object Dedup {
     // and unpersist it EAGERLY the moment the next round has materialized
     // — safe because a superseded round's frame is never re-executed
     // (unpersisting a localCheckpoint'd RDD forfeits recomputation).
-    def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-        case _ => None
-      }
-    var prevCkpt = ckptRdd(labels)
+    var prevCkpt = checkpointRdd(labels)
     // DELTA iteration: labels only ever decrease, so a node can improve
     // in round r only through a neighbor whose label changed in round
     // r-1 (if v's label is older, u already saw it the round after v
@@ -450,7 +445,7 @@ object Dedup {
       // the count above fully materialized `next`, so the previous
       // round's checkpoint blocks are dead — release them now
       prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = ckptRdd(next)
+      prevCkpt = checkpointRdd(next)
       labels = next.select("id", "comp")
       // next round's frontier: nodes whose label improved this round
       // (a filter over the checkpointed frame — no extra materialization)
@@ -469,6 +464,16 @@ object Dedup {
     labels
   }
 
+  /** The RDD holding a `localCheckpoint`ed frame's blocks: unpersisting
+    * it releases them eagerly instead of at the ContextCleaner's GC-driven
+    * pace, and forfeits the frame (it cannot be recomputed after). */
+  private[graft] def checkpointRdd(
+      df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
+    }
+
   /** LSH band rows of the portable md5 minhash signature — one
     * (id, band_id, band_key) row per band per doc. This is the standing
     * near-dup INDEX artifact: materialize it (bucketed on the band key)
@@ -476,17 +481,23 @@ object Dedup {
     * in O(batch) instead of re-running LSH over the whole corpus. */
   def nearDupBandRows(docs: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, bands: Int = 4,
-                      rowsPerBand: Int = 4): DataFrame = {
-    val k = bands * rowsPerBand
+                      rowsPerBand: Int = 4): DataFrame =
+    sigBandRows(docs.select(col(idCol),
+        minhashSignatureFast(col(textCol), shingleN, bands * rowsPerBand)
+          .as("sig")),
+      idCol, bands, rowsPerBand)
+
+  /** The band format of the standing index: (id, band_id, band_key) rows
+    * exploded from a frame's `sig` column (a bands × rowsPerBand
+    * [[minhashSignatureFast]] signature), empty signatures skipped. */
+  def sigBandRows(sigs: DataFrame, idCol: String, bands: Int,
+                  rowsPerBand: Int): DataFrame = {
     val bandRows = (0 until bands).map { b =>
       struct(lit(b).as("band_id"),
         concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))
           .as("band_key"))
     }
-    docs
-      .select(col(idCol),
-        minhashSignatureFast(col(textCol), shingleN, k).as("sig"))
-      .filter(size(col("sig")) > 0)
+    sigs.filter(size(col("sig")) > 0)
       .select(col(idCol), explode(array(bandRows: _*)).as("band"))
       .select(col(idCol), col("band.band_id"), col("band.band_key"))
   }
@@ -531,8 +542,8 @@ object Dedup {
 
   /** [[incrementalNearDups]] over PRE-BUILT batch band rows / shingle
     * sets — the probe stage alone. Callers that also LAND nb/ns as index
-    * growth (the streaming ingest) build them once, localCheckpoint, and
-    * share the frames between the probe and the index writes instead of
+    * growth (the streaming ingest) derive both from one localCheckpoint
+    * and share them between the probe and the index writes instead of
     * re-running the text kernels per consumer (the r19 q246/q247 cost
     * audit measured the batch text kernel evaluated ~5x per batch). */
   def incrementalNearDupsFrom(nb: DataFrame, ns: DataFrame,
@@ -648,19 +659,27 @@ object Dedup {
     * shuffle, zero explode of corpus tokens. */
   def contamination(docs: DataFrame, evalDocs: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
-                    shingleN: Int = 3): DataFrame = {
-    val evalArr = evalDocs
-      .select(explode(shingleHashesFast(col(textCol), shingleN)).as("h"))
-      .agg(sort_array(collect_set(col("h"))).as("eval_hs"))
+                    shingleN: Int = 3): DataFrame =
     docs
       .select(col(idCol), shingleHashesFast(col(textCol), shingleN).as("hs"))
-      .crossJoin(broadcast(evalArr))
+      .crossJoin(broadcast(evalShingles(evalDocs, textCol, shingleN)))
       .select(col(idCol),
         size(col("hs")).cast("long").as("n_shingles"),
-        sortedIntersectCount(col("hs"), col("eval_hs")).cast("long")
-          .as("n_contaminated"))
+        evalHits(col("hs"), col("eval_hs")).as("n_contaminated"))
       .withColumn("contaminated", col("n_contaminated") > 0)
-  }
+
+  /** The eval set as ONE row: `eval_hs`, the sorted distinct shingle
+    * hashes of every eval doc — the broadcast side of [[contamination]]. */
+  def evalShingles(evalDocs: DataFrame, textCol: String,
+                   shingleN: Int): DataFrame =
+    evalDocs
+      .select(explode(shingleHashesFast(col(textCol), shingleN)).as("h"))
+      .agg(sort_array(collect_set(col("h"))).as("eval_hs"))
+
+  /** How many of a doc's sorted shingle hashes `hs` occur in the eval
+    * set `evalHs` (an [[evalShingles]] array joined onto the row). */
+  def evalHits(hs: Column, evalHs: Column): Column =
+    sortedIntersectCount(hs, evalHs).cast("long")
 
   /** Bloom-thinned decontamination — [[contamination]] for when the
     * eval shingle set outgrows a comfortably-broadcastable sorted

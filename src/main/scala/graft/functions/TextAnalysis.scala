@@ -186,30 +186,59 @@ object TextAnalysis {
     */
   def qualityVerdict(docs: org.apache.spark.sql.DataFrame,
                      idCol: String = "doc_id", textCol: String = "text",
-                     minWords: Int = 10, maxWords: Int = 5000,
-                     minAlphaBp: Int = 5000,
-                     maxTopWordFrac: Double = 0.3)
+                     minWords: Int = MinWords, maxWords: Int = MaxWords,
+                     minAlphaBp: Int = MinAlphaBp,
+                     maxTopWordFrac: Double = MaxTopWordFrac)
       : org.apache.spark.sql.DataFrame = {
     val t = col(textCol)
-    val cc = charClassCountsFast(t)
-    val bp = when(cc.getItem(0) === 0, lit(0L))
-      .otherwise(floor(cc.getItem(1) * lit(10000.0) / cc.getItem(0)))
-      .cast("long")
     // census kernels are the dominant per-row cost — floor the
     // parallelism when the input is an under-parallel small scan
     graft.sources.Tables.fanOut(docs, col(idCol))
       .select(col(idCol) +:
-        (repetitionMetricsFast(t) :+ bp.as("alpha_bp")): _*)
-      .withColumn("reason",
-        when(col("n_words") < minWords, "too_short")
-          .when(col("n_words") > maxWords, "too_long")
-          .when(col("alpha_bp") < minAlphaBp, "low_alpha")
-          .when(col("top_word_frac") > maxTopWordFrac, "repetitive")
-          .otherwise(lit(null).cast("string")))
+        (repetitionMetricsFast(t) :+ alphaBp(t).as("alpha_bp")): _*)
+      .withColumn("reason", reasonChain(col("n_words"), col("alpha_bp"),
+        col("top_word_frac"), minWords, maxWords, minAlphaBp,
+        maxTopWordFrac))
       .withColumn("keep", col("reason").isNull)
       .select(idCol, "n_words", "alpha_bp", "top_word_frac", "keep",
         "reason")
   }
+
+  /** [[qualityVerdict]]'s default keep policy: the word-count window,
+    * the alphabetic-share floor (basis points) and the top-word cap. */
+  private val MinWords = 10
+  private val MaxWords = 5000
+  private val MinAlphaBp = 5000
+  private val MaxTopWordFrac = 0.3
+
+  /** [[qualityVerdict]]'s `reason` under its default thresholds,
+    * straight from the text column — the first failing rule, NULL when
+    * the doc is kept — for a caller that filters rows in place instead
+    * of joining to a verdict frame. */
+  def qualityReason(text: Column): Column = {
+    val Seq(nWords, _, topWordFrac, _) = repetitionMetricsFast(text)
+    reasonChain(nWords, alphaBp(text), topWordFrac, MinWords, MaxWords,
+      MinAlphaBp, MaxTopWordFrac)
+  }
+
+  /** Alphabetic share of the non-space characters, in basis points
+    * (0 for an all-space text). */
+  private def alphaBp(text: Column): Column = {
+    val cc = charClassCountsFast(text)
+    when(cc.getItem(0) === 0, lit(0L))
+      .otherwise(floor(cc.getItem(1) * lit(10000.0) / cc.getItem(0)))
+      .cast("long")
+  }
+
+  private def reasonChain(nWords: Column, alphaBp: Column,
+                          topWordFrac: Column, minWords: Int,
+                          maxWords: Int, minAlphaBp: Int,
+                          maxTopWordFrac: Double): Column =
+    when(nWords < minWords, "too_short")
+      .when(nWords > maxWords, "too_long")
+      .when(alphaBp < minAlphaBp, "low_alpha")
+      .when(topWordFrac > maxTopWordFrac, "repetitive")
+      .otherwise(lit(null).cast("string"))
 
   /** Corpus-derived quality thresholds (q126's adaptive gate lifted to
     * a reusable function): the `percentile`-th percentile of `alpha_bp`

@@ -422,13 +422,12 @@ object StreamedQueries {
         // keeps its full near-dup structure at any scale. See
         // ExtensionShared.certSliceCutoff.
         val cut = certSliceCutoff(s, dir, target = 5000L)
-        // cache the slice: each wave consumes its batch frame ~5 times
-        // (band rows, shingle sets, own-id anti, probe, index land),
-        // so uncached the three waves re-read the text column ~15
-        // times (~measured 2.7 s of pure re-scan at sf1); the window
-        // itself is bounded (~5k docs) at any corpus size — and the
-        // id cutoff IS a parquet-pushable min/max predicate, so at
-        // scale the scan prunes to the head row groups
+        // cache the slice: each wave reads its batch frame once (into
+        // nearDupBatch's one checkpoint), so cached the window is read
+        // from parquet once for all three waves instead of once per
+        // wave; the window itself is bounded (~5k docs) at any corpus
+        // size — and the id cutoff IS a parquet-pushable min/max
+        // predicate, so at scale the scan prunes to the head row groups
         val docs = Tables.load(s, dir, "documents")
           .filter(col("doc_id") <= cut)
           .select(col("doc_id"), col("text"))
@@ -500,10 +499,11 @@ object StreamedQueries {
         val eval = all.filter(col("doc_id") % (17L * evalM) === 0)
           .persist()
         val cut = certSliceCutoff(s, dir, target = 2500L)
-        // cache the slice (the q246 rationale: each wave's batch frame
-        // is consumed ~7 times through curateBatch — index build, probe,
-        // quality, contamination, final joins); bounded at ~2.5k docs
-        // at any corpus size, and the id cutoff is parquet-pushable
+        // cache the slice (the q246 rationale: the tercile read below
+        // and each wave's two reads of its batch frame through
+        // curateBatch — the near-dup checkpoint and the curation
+        // filter — share one parquet read); bounded at ~2.5k docs at
+        // any corpus size, and the id cutoff is parquet-pushable
         val corpus = all.filter(col("doc_id") % 17 =!= 0 &&
           col("doc_id") <= cut)
           .persist()

@@ -2,14 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.functions.Dedup
+import graft.functions.{Dedup, TextAnalysis}
 
 /** Streaming near-duplicate ingestion: the composition of the two proven
   * pieces — exactly-once micro-batch landing (idempotent per-batch
   * overwrite, EventStreams.idempotentBatchWrite's recipe) and the
   * incremental near-dup probe against a STANDING band/shingle index
-  * (Dedup.incrementalNearDups). Each micro-batch:
+  * (Dedup.incrementalNearDups). Each micro-batch scans its text once,
+  * into one checkpoint of (id, shingle set, MinHash signature) that
+  * the three steps below share and that is released after them:
   *
   *   1. probes the standing index (batch bands BROADCAST to the index —
   *      the index never reshuffles, O(batch) per micro-batch);
@@ -32,8 +35,8 @@ import graft.functions.Dedup
 object DocumentStreams {
 
   /** Load one standing-index side, tolerating the empty bootstrap (no
-    * directory yet → empty frame with the right schema, derived from the
-    * builder run on a zero-row batch). */
+    * directory yet → empty frame with the right schema, taken from the
+    * caller's batch-derived frame with its rows cut to zero). */
   private def loadIndex(spark: SparkSession, path: String,
                         schemaOf: DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -47,32 +50,34 @@ object DocumentStreams {
 
   /** One micro-batch of the streaming near-dup ingest (public so the
     * batch twin in tests — and any foreachBatch caller — runs the exact
-    * same code path). */
+    * same code path). Returns the schema the pairs landed with, so a
+    * reader of them infers nothing from the files. */
   def nearDupBatch(batch: DataFrame, batchId: Long, indexDir: String,
                    outPath: String, idCol: String, textCol: String,
                    shingleN: Int, bands: Int, rowsPerBand: Int,
-                   minJaccardBp: Long): Unit = {
+                   minJaccardBp: Long): StructType = {
     val spark = batch.sparkSession
-    val docs = batch.select(col(idCol), col(textCol))
-    val emptyDocs = docs.limit(0)
-    val idxBands = loadIndex(spark, s"$indexDir/bands",
-      Dedup.nearDupBandRows(emptyDocs, idCol, textCol, shingleN, bands,
-        rowsPerBand))
-    val idxShingles = loadIndex(spark, s"$indexDir/shingles",
-      Dedup.shingleSets(emptyDocs, idCol, textCol, shingleN))
+    val text = col(textCol)
+    // ONE checkpoint per batch — (id, shingle set, signature), the only
+    // scan of the batch text: the probe references the band rows and
+    // shingle sets 2x each and the index growth lands both, so without
+    // a materialization point the text kernels ran ~5x per batch (r19
+    // audit). Band rows explode from `sig` and shingle sets project
+    // `hs`, both over the checkpointed rows.
+    val sigs = batch.select(col(idCol),
+        Dedup.shingleHashesFast(text, shingleN).as("hs"),
+        Dedup.minhashSignatureFast(text, shingleN, bands * rowsPerBand)
+          .as("sig"))
+      .localCheckpoint()
+    val nb = Dedup.sigBandRows(sigs, idCol, bands, rowsPerBand)
+    val ns = sigs.filter(size(col("hs")) > 0).select(col(idCol), col("hs"))
+    val idxBands = loadIndex(spark, s"$indexDir/bands", nb.limit(0))
+    val idxShingles = loadIndex(spark, s"$indexDir/shingles", ns.limit(0))
     // a replayed batch may already have contributed index rows (crash
     // between index write and checkpoint commit) — remove its own ids so
-    // replay probes the same index state the first attempt did
-    val ownIds = docs.select(col(idCol)).distinct()
-    // build the batch's band rows and shingle sets ONCE and checkpoint:
-    // the probe references each 2x and the index growth lands the same
-    // frames, so uncheckpointed the batch text kernel ran ~5x per batch
-    // (r19 audit) — now once, with the writes scanning the materialized
-    // frames
-    val nb = Dedup.nearDupBandRows(docs, idCol, textCol, shingleN, bands,
-      rowsPerBand).localCheckpoint()
-    val ns = Dedup.shingleSets(docs, idCol, textCol, shingleN)
-      .localCheckpoint()
+    // replay probes the same index state the first attempt did (repeated
+    // build keys do not change an anti-join, so no distinct)
+    val ownIds = sigs.select(col(idCol))
     val pairs = Dedup.incrementalNearDupsFrom(nb, ns,
       idxBands.join(broadcast(ownIds), Seq(idCol), "left_anti"),
       idxShingles.join(broadcast(ownIds), Seq(idCol), "left_anti"),
@@ -82,6 +87,10 @@ object DocumentStreams {
       .parquet(s"$indexDir/bands/batch_id=$batchId")
     ns.write.mode("overwrite")
       .parquet(s"$indexDir/shingles/batch_id=$batchId")
+    // blocking: the blocks are gone when the call returns, so no removal
+    // runs on into the caller's next job
+    Dedup.checkpointRdd(sigs).foreach(_.unpersist(blocking = true))
+    pairs.schema
   }
 
   /** One micro-batch of the STREAMING CURATION pipeline — the
@@ -92,7 +101,11 @@ object DocumentStreams {
     * lower-id batch-mate; the index grows by ALL batch docs, kept or
     * dropped, so a later twin of a dropped doc is dropped too), and
     * benchmark decontamination against the fixed eval set (one
-    * broadcast shingle array). All writes key by batch_id and
+    * broadcast shingle array). The quality rules and the eval-shingle
+    * count run as one filter over the batch rows, then one broadcast
+    * anti-join drops the near-duplicates. The filter judges each row
+    * on its own text, so it relies on doc ids being unique within a
+    * batch, as [[nearDupBatch]] does. All writes key by batch_id and
     * overwrite on replay — the same exactly-once recipe as
     * [[nearDupBatch]], which this calls for the index step. Driven to
     * completion on id-ordered waves, the accumulated curated set
@@ -103,22 +116,23 @@ object DocumentStreams {
                   textCol: String = "text", shingleN: Int = 3,
                   bands: Int = 4, rowsPerBand: Int = 4,
                   minJaccardBp: Long = 5000): Unit = {
-    nearDupBatch(batch, batchId, indexDir, pairsPath, idCol, textCol,
-      shingleN, bands, rowsPerBand, minJaccardBp)
+    val pairSchema = nearDupBatch(batch, batchId, indexDir, pairsPath,
+      idCol, textCol, shingleN, bands, rowsPerBand, minJaccardBp)
     val spark = batch.sparkSession
-    val docs = batch.select(col(idCol), col(textCol))
+    val text = col(textCol)
     // the landed pairs ARE this batch's duplicate verdicts (reading the
-    // sink keeps replay ≡ first run — same bytes either way)
+    // sink keeps replay ≡ first run — same bytes either way), read with
+    // the schema they were written with: no footer-inference job
     val dropped = spark.read
+      .schema(pairSchema)
       .parquet(s"$pairsPath/batch_id=$batchId")
-      .select(col("new_id").as(idCol)).distinct()
-    val kept = graft.functions.TextAnalysis.qualityVerdict(docs)
-      .filter(col("keep")).select(idCol)
-    val clean = Dedup.contamination(docs, evalDocs, idCol, textCol,
-        shingleN)
-      .filter(col("n_contaminated") === 0).select(idCol)
-    batch.join(kept, Seq(idCol), "left_semi")
-      .join(clean, Seq(idCol), "left_semi")
+      .select(col("new_id").as(idCol))
+    batch.crossJoin(broadcast(Dedup.evalShingles(evalDocs, textCol,
+        shingleN)))
+      .filter(TextAnalysis.qualityReason(text).isNull &&
+        Dedup.evalHits(Dedup.shingleHashesFast(text, shingleN),
+          col("eval_hs")) === 0)
+      .drop("eval_hs")
       .join(broadcast(dropped), Seq(idCol), "left_anti")
       .write.mode("overwrite")
       .parquet(s"$curatedPath/batch_id=$batchId")

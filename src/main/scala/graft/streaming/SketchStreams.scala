@@ -17,6 +17,10 @@ import graft.functions.Sketches
   */
 object SketchStreams {
 
+  /** The schema of the co-occurrence state's `pc` frame. */
+  private val PairCounts = org.apache.spark.sql.types.StructType.fromDDL(
+    "type_a STRING, type_b STRING, n_ab BIGINT")
+
   /** One micro-batch of the heavy-hitter merge (public so tests and any
     * foreachBatch caller run the exact same code path). */
   def hhBatch(batch: DataFrame, batchId: Long, stateDir: String, k: Int,
@@ -77,15 +81,17 @@ object SketchStreams {
     val spark = batch.sparkSession
     val batchUt = batch.select(col(userCol).as("user_id"),
       col(typeCol).as("event_type")).distinct()
+    // state is read back with the schema it was written with: no
+    // footer-inference job per read
     val (standingUt, standingPc) =
       VersionedState.prior(spark, stateDir, batchId, "ut") match {
         case Some(prev) =>
-          (spark.read.parquet(s"$prev/ut"), spark.read.parquet(s"$prev/pc"))
+          (spark.read.schema(batchUt.schema).parquet(s"$prev/ut"),
+            spark.read.schema(PairCounts).parquet(s"$prev/pc"))
         case None =>
           (batchUt.limit(0), spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "type_a STRING, type_b STRING, n_ab BIGINT")))
+            PairCounts))
       }
     val (mergedUt, mergedPc) = cooccurFold(standingUt, standingPc,
       batchUt)
@@ -117,10 +123,11 @@ object SketchStreams {
       .join(newUt.select(col("user_id"), col("event_type").as("tb")),
         Seq("user_id"))
       .filter(col("ta") < col("tb"))
+    // each new pair counts 1: one aggregation folds them into the
+    // standing counts
     val newPairs = withStanding.unionByName(withNew)
       .select(least(col("ta"), col("tb")).as("type_a"),
-        greatest(col("ta"), col("tb")).as("type_b"))
-      .groupBy("type_a", "type_b").agg(count(lit(1)).as("n_ab"))
+        greatest(col("ta"), col("tb")).as("type_b"), lit(1L).as("n_ab"))
     val mergedPc = standingPc.unionByName(newPairs)
       .groupBy("type_a", "type_b").agg(sum(col("n_ab")).as("n_ab"))
     (standingUt.unionByName(newUt), mergedPc)
@@ -129,5 +136,6 @@ object SketchStreams {
   /** The pair counts of the latest committed co-occurrence version. */
   def latestCooccurrence(spark: SparkSession,
                          stateDir: String): DataFrame =
-    spark.read.parquet(s"${VersionedState.latest(spark, stateDir, "ut")}/pc")
+    spark.read.schema(PairCounts)
+      .parquet(s"${VersionedState.latest(spark, stateDir, "ut")}/pc")
 }

@@ -1453,4 +1453,57 @@ class StreamingSpec extends AnyFunSuite {
     assert(committed.nonEmpty)
     assert(rows(latest(st)) == committed)
   }
+
+  /** The jobs `body` runs, counted by a listener scoped to one job
+    * group: broadcast and adaptive-stage jobs inherit the group. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "streamed-wave job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc, 5000)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("a streamed wave's job counts: curateBatch on a second wave and " +
+    "cooccurBatch from a committed predecessor (one batch checkpoint, " +
+    "no state schema inference)") {
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-wavejobs").toString
+    val docs = graft.sources.Tables.load(spark, dir, "documents")
+      .select("doc_id", "text")
+    val eval = docs.filter(col("doc_id") % 17 === 0)
+    val corpus = docs.filter(col("doc_id") % 17 =!= 0)
+    def curate(b: Long, wave: org.apache.spark.sql.DataFrame): Unit =
+      graft.streaming.DocumentStreams.curateBatch(wave, b, eval,
+        s"$base/index", s"$base/pairs", s"$base/curated",
+        minJaccardBp = 2000)
+    curate(0L, corpus.filter(col("doc_id") < 150))
+    val curateJobs = jobsIn(curate(1L, corpus.filter(col("doc_id") >= 150)))
+    val ev = graft.sources.Tables.events(spark, dir)
+      .select("user_id", "event_type", "event_id")
+    def cooccur(b: Long): Unit = graft.streaming.SketchStreams.cooccurBatch(
+      ev.filter(col("event_id") % 2 === b), b, s"$base/state")
+    cooccur(0L)
+    val cooccurJobs = jobsIn(cooccur(1L))
+    // exact counts in this suite's session: a second batch checkpoint,
+    // a distinct() before an anti-join or a schema-inferring state read
+    // each adds a job
+    assert(curateJobs == 14, "curateBatch jobs on a second wave")
+    assert(cooccurJobs == 7, "cooccurBatch jobs from a committed v=0")
+  }
 }
