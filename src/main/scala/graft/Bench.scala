@@ -69,7 +69,10 @@ object Bench {
 
     // Warmup (untimed): run every query once so the timed passes measure
     // steady-state execution (codegen class cache, parquet footers, JIT),
-    // not first-run compilation.
+    // not first-run compilation. The class cache holds the whole fleet's
+    // generated classes (3,401 in a sf0.1 warm-up pass) only because
+    // GraftSession sizes it to 8192 entries (CodegenCacheEntries); at
+    // Spark's default of 100 a second pass at sf0.01 recompiled 6,855.
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Isolation: iterative queries (per-round localCheckpoint loops) run
     // LAST within each pass. Even with eager in-loop unpersist, an

@@ -23,7 +23,9 @@ object BenchOne {
     // timed pass: isolation runs answer "does the fix hold" questions,
     // and for the spill class the decisive number is spilled bytes, not
     // seconds; the streamed-wave family's residual cost is per-JOB fixed
-    // overhead (scheduling, commit protocol), invisible in bytes/seconds
+    // overhead (scheduling, commit protocol), invisible in bytes/seconds;
+    // compiles per pass is 0 unless the generated-class working set
+    // overflows the codegen cache, which re-bills Janino every pass
     val counters = TaskCounters.register(spark)
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count(): Unit
@@ -53,7 +55,7 @@ object BenchOne {
         s""""shuffle_write_bytes":${d.shuffleWrite / 3},""" +
         s""""spilled_bytes":${d.spill / 3},""" +
         s""""jobs":${d.jobs / 3},"stages":${d.stages / 3},""" +
-        s""""tasks":${d.tasks / 3},""" +
+        s""""tasks":${d.tasks / 3},"compiles":${d.compiles / 3},""" +
         s""""sf":"$sfDir"}"""
     }
     spark.stop()

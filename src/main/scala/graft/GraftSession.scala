@@ -13,10 +13,42 @@ import graft.plans.{CharClassCounts, ContentChunkHashes, CosineSimilarity,
   */
 object GraftSession {
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Measured
+    * working sets: one `Pipeline.runDay` uses 115 generated classes, one
+    * streamed curate + co-occurrence wave about 50, and the 276
+    * registered queries 4,161 at sf0.01 (3,401 in a sf0.1 Bench warm-up
+    * pass). At the default 100 every `runDay` after the first recompiles
+    * most of its classes with Janino, and a second pass over the
+    * registered queries at sf0.01 recompiled 6,855. 8192 is twice the
+    * fleet's working set: the cache is a bounded LRU split into
+    * segments, and one full segment evicts while the others still have
+    * room.
+    *
+    * This is a static conf, read once per JVM when Spark's code
+    * generator is first used: it takes effect only if the first session
+    * in the JVM is built through [[builder]].
+    */
+  val CodegenCacheEntries: Int = 8192
+
+  /** The settings under which a plan's generated classes are reused from
+    * the codegen cache, keyed by their source text: the cache size above,
+    * and no whole-stage id in class names. Adaptive execution numbers a
+    * query's codegen stages in the order it creates them, which depends
+    * on which stages finish first; with the id in the class name, a
+    * renumbered stage is new source and compiles again (seen as 4 extra
+    * compiles in one `runDay`: two stages, each for the driver's and
+    * the executors' class loader).
+    */
+  val CodegenReuse: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   /** Builder with the engine's recommended local-mode configuration:
     * shuffle partitions sized to cores (not 200), AQE on (runtime
     * coalescing/skew handling), UTC, dynamic partition overwrite for
-    * idempotent re-runs (SURVEY.md §4).
+    * idempotent re-runs (SURVEY.md §4), and generated classes reused
+    * across plans and days ([[CodegenReuse]]).
     */
   def builder(master: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -25,6 +57,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      .config(CodegenReuse)
       .withExtensions(new GraftExtensions)
 
   /** [[builder]] for graft's command-line mains: `local[cpus]`, UI off. */

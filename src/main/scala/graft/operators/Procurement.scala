@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType}
 
+import graft.plans.OpaqueLiteral
+
 /** The procurement engine core: every relational stage of the reference
   * pipeline (SALMASAID1/Procurement-Data-Pipeline) re-expressed as a
   * composable `DataFrame => DataFrame` library over Spark.
@@ -176,14 +178,17 @@ object Procurement {
 
   /** net_demand with the persisted-table schema + calculation_date column
     * (docker/dags/sql/net_demand_insert.sql:38-69,
-    * trino_init_tables_dag.py:82-91).
+    * trino_init_tables_dag.py:82-91). The date is an [[OpaqueLiteral]]:
+    * a plain DATE literal is inlined into the generated Java, so every
+    * day would compile its own copy of this stage's classes.
     */
   def netDemandForInsert(orders: DataFrame, inventory: DataFrame,
                          products: DataFrame, suppliers: DataFrame,
                          productSuppliers: DataFrame, d: LocalDate): DataFrame =
     netDemand(orders, inventory, products, suppliers, productSuppliers, d)
       .withColumn("net_demand", col("net_demand").cast(IntegerType))
-      .withColumn("calculation_date", lit(java.sql.Date.valueOf(d)))
+      .withColumn("calculation_date",
+        OpaqueLiteral.column(java.sql.Date.valueOf(d)))
       .select("product_id", "product_name", "supplier_id", "supplier_name",
         "net_demand", "unit_cost", "estimated_cost", "calculation_date")
 
@@ -244,11 +249,11 @@ object Procurement {
                  productSuppliers: DataFrame, ordersWhen: Column,
                  inventoryWhen: Column): DataFrame = {
     // the union only reports product SETS (the per-product order counts of
-    // q05 are not part of the exception record), so both checks can share
-    // ONE distinct pass over the day's ordered products — identical
-    // subplans on both union branches mean the fact scan + distinct
-    // exchange run once (ReusedExchange) and each check is a broadcast
-    // anti-join probe on a master-data-sized key set
+    // q05 are not part of the exception record), so each check is an
+    // anti-join of the day's ordered products against a master-data-sized
+    // key set. The branches do NOT share one scan: the optimizer pushes
+    // each anti-join below the distinct, so the two subplans differ and
+    // the executed plan scans `orders` twice, with no ReusedExchange
     val ordered = orders.filter(ordersWhen).select("product_id").distinct()
     val q1 = ordered
       .join(broadcast(productSuppliers.select("product_id").distinct()),

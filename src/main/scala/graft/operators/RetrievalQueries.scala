@@ -799,7 +799,7 @@ object RetrievalQueries {
           .filter(col("ta") < col("tb"))
           .groupBy(col("ta").as("type_a"), col("tb").as("type_b"))
           .agg(count(lit(1)).as("n_ab"))
-        val (_, mergedPc) = graft.streaming.SketchStreams.cooccurFold(
+        val (_, mergedPc, _) = graft.streaming.SketchStreams.cooccurFold(
           standingUt, standingPc, ut(ev.filter(batchPred)))
         mergedPc.orderBy("type_a", "type_b")
       },

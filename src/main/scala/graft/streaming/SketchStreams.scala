@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.Sketches
+import graft.functions.{Dedup, Sketches}
 
 /** Streaming heavy-hitter maintenance: the sketch-side member of the
   * versioned standing-artifact family (index — IndexStreams, dimension
@@ -93,11 +93,13 @@ object SketchStreams {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             PairCounts))
       }
-    val (mergedUt, mergedPc) = cooccurFold(standingUt, standingPc,
+    val (mergedUt, mergedPc, newUt) = cooccurFold(standingUt, standingPc,
       batchUt)
     val next = VersionedState.path(stateDir, batchId)
     mergedPc.write.mode("overwrite").parquet(s"$next/pc")
     mergedUt.write.mode("overwrite").parquet(s"$next/ut")
+    // blocking: the checkpoint's blocks are gone when the call returns
+    Dedup.checkpointRdd(newUt).foreach(_.unpersist(blocking = true))
   }
 
   /** The pure co-occurrence fold shared by the streaming maintainer and
@@ -108,9 +110,13 @@ object SketchStreams {
     * the standing side can't be new), and with OTHER new memberships of
     * the user (type-order guard keeps each unordered new×new pair
     * once) — so folded ≡ one-shot over the concatenated event stream,
-    * however events split across batches. */
+    * however events split across batches. The third frame is the
+    * local checkpoint of the new memberships that both folded frames
+    * read: a caller that materializes them releases it after its last
+    * read (`Dedup.checkpointRdd`); one that returns them lazily keeps
+    * it. */
   def cooccurFold(standingUt: DataFrame, standingPc: DataFrame,
-                  batchUt: DataFrame): (DataFrame, DataFrame) = {
+                  batchUt: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions._
     val newUt = batchUt.join(standingUt, Seq("user_id", "event_type"),
       "left_anti").localCheckpoint()
@@ -130,7 +136,7 @@ object SketchStreams {
         greatest(col("ta"), col("tb")).as("type_b"), lit(1L).as("n_ab"))
     val mergedPc = standingPc.unionByName(newPairs)
       .groupBy("type_a", "type_b").agg(sum(col("n_ab")).as("n_ab"))
-    (standingUt.unionByName(newUt), mergedPc)
+    (standingUt.unionByName(newUt), mergedPc, newUt)
   }
 
   /** The pair counts of the latest committed co-occurrence version. */

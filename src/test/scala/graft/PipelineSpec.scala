@@ -43,6 +43,47 @@ class PipelineSpec extends AnyFunSuite {
     assert(agg.count() == 5)
   }
 
+  test("a steady runDay compiles no generated class: the second of two " +
+    "fixture days reuses every class of the first") {
+    import org.apache.spark.sql.functions.lit
+    val p = new ProcurementSpec
+    val tmp = Files.createTempDirectory("graft-pipe-codegen").toString
+    val d1 = p.d
+    val d2 = d1.plusDays(1)
+    // the fixture day twice, as date-partitioned parquet: the shape the
+    // pipeline reads in production (partition pruning, no date filter
+    // left in the scan's stage)
+    def twoDays(df: org.apache.spark.sql.DataFrame, dateCol: String,
+                name: String) = {
+      df.unionByName(df.withColumn(dateCol, lit(java.sql.Date.valueOf(d2))))
+        .write.partitionBy(dateCol).parquet(s"$tmp/$name")
+      spark.read.parquet(s"$tmp/$name")
+    }
+    val orders = twoDays(p.orders, "order_date", "orders")
+    val inventory = twoDays(p.inventory, "snapshot_date", "inventory")
+    def run(d: LocalDate): Pipeline.Result =
+      Pipeline.runDay(spark, orders, inventory, p.products, p.suppliers,
+        p.productSuppliers, Pipeline.Config(
+          warehouseDir = s"$tmp/warehouse", outputDir = s"$tmp/output",
+          logsDir = s"$tmp/logs", dataDate = d,
+          generatedAt = s"${d.plusDays(1)}T00:00:00"))
+    val r1 = run(d1)
+    val c0 = TaskCounters.compiles
+    val r2 = run(d2)
+    val compiles = TaskCounters.compiles - c0
+    assert(r2.netDemandRows == r1.netDemandRows)
+    assert(r2.exceptionCount == r1.exceptionCount)
+    // the date is written as the DATE partition column it always was
+    val nd = spark.read.parquet(s"$tmp/warehouse/net_demand")
+    assert(nd.schema("calculation_date").dataType ==
+      org.apache.spark.sql.types.DateType)
+    assert(nd.select("calculation_date").distinct().collect()
+      .map(_.getDate(0).toLocalDate).toSet == Set(d1, d2))
+    // with Spark's default class cache (100 entries) the day's working
+    // set overflows it, and this second day recompiled 116 classes
+    assert(compiles == 0, "classes compiled by the second day's runDay")
+  }
+
   test("backfillAggregates: one ranged scan covers multiple days and " +
     "overwrites only its partitions") {
     val spark2 = spark

@@ -1492,18 +1492,28 @@ class StreamingSpec extends AnyFunSuite {
       graft.streaming.DocumentStreams.curateBatch(wave, b, eval,
         s"$base/index", s"$base/pairs", s"$base/curated",
         minJaccardBp = 2000)
+    val wave1 = corpus.filter(col("doc_id") >= 150)
     curate(0L, corpus.filter(col("doc_id") < 150))
-    val curateJobs = jobsIn(curate(1L, corpus.filter(col("doc_id") >= 150)))
+    val curateJobs = jobsIn(curate(1L, wave1))
     val ev = graft.sources.Tables.events(spark, dir)
       .select("user_id", "event_type", "event_id")
-    def cooccur(b: Long): Unit = graft.streaming.SketchStreams.cooccurBatch(
-      ev.filter(col("event_id") % 2 === b), b, s"$base/state")
-    cooccur(0L)
-    val cooccurJobs = jobsIn(cooccur(1L))
+    val slice1 = ev.filter(col("event_id") % 2 === 1L)
+    def cooccur(b: Long, slice: org.apache.spark.sql.DataFrame): Unit =
+      graft.streaming.SketchStreams.cooccurBatch(slice, b, s"$base/state")
+    cooccur(0L, ev.filter(col("event_id") % 2 === 0L))
+    val cooccurJobs = jobsIn(cooccur(1L, slice1))
     // exact counts in this suite's session: a second batch checkpoint,
     // a distinct() before an anti-join or a schema-inferring state read
     // each adds a job
     assert(curateJobs == 14, "curateBatch jobs on a second wave")
     assert(cooccurJobs == 7, "cooccurBatch jobs from a committed v=0")
+    // a further wave of the same shape (the same slices again, as batch
+    // 2: the inputs' filter literals are part of the generated code)
+    // reuses every class the previous wave generated
+    val c0 = TaskCounters.compiles
+    curate(2L, wave1)
+    cooccur(2L, slice1)
+    assert(TaskCounters.compiles - c0 == 0,
+      "classes compiled by a further curate + co-occurrence wave")
   }
 }
