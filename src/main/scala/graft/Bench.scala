@@ -166,8 +166,7 @@ object Bench {
     // artifact not yet committed).
     val resultsName = sys.env
       .getOrElse("SPARK_GRAFT_RESULTS_FILE", "bench_results.json")
-    val resultsFile = java.nio.file.Paths
-      .get(sys.props("user.dir"), resultsName)
+    val resultsFile = resultsPath(sys.props("user.dir"), resultsName)
     captureShuffle = true
     val pass1 = execOrder.map(n => n -> timed(n)).toMap
     captureShuffle = false
@@ -729,6 +728,11 @@ object Bench {
         s.take(80))
     s
   }
+
+  /** Where the results artifact `name` is written: a relative name
+    * resolves against `cwd`, an absolute one is taken as it is. */
+  def resultsPath(cwd: String, name: String): java.nio.file.Path =
+    java.nio.file.Paths.get(cwd).resolve(name)
 
   /** The committed previous artifact via `git show HEAD:<file>` — the
     * canary's baseline must be the last ROUND's numbers, not whatever an

@@ -14,6 +14,9 @@ import graft.sources.Sinks
   * Differences by design (SURVEY.md §3.2, §4):
   *  - stages hand each other DataFrames, not XCom rows — the net-demand
   *    frame is cached once and feeds both the table insert and the export;
+  *  - the quality stage runs its plan once: `Procurement.exceptions`
+  *    returns the day's exception set as a local relation, so its count
+  *    and the exception log read driver memory;
   *  - date protocol is explicit (`dataDate`, `orderDate = dataDate + 1`,
   *    procurement_dag.py:348-362), not hidden scheduler math;
   *  - writes are idempotent (dynamic partition overwrite) so re-running a

@@ -2,10 +2,12 @@ package graft.operators
 
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType}
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
 
 import graft.plans.OpaqueLiteral
 
@@ -140,7 +142,19 @@ object Procurement {
                 ordersWhen: Column,
                 inventoryWhen: Column,
                 rankTieBreak: Seq[Column] = Nil,
-                money: DecimalType = DecimalType(10, 2)): DataFrame = {
+                money: DecimalType = DecimalType(10, 2)): DataFrame =
+    netDemandRows(orders, inventory, products, suppliers, productSuppliers,
+      ordersWhen, inventoryWhen, rankTieBreak, money)
+      .orderBy(asc("supplier_id"), asc("supplier_priority"),
+        desc("net_demand"))
+
+  /** [[netDemand]] without its presentation order (net_demand.sql:87). */
+  private def netDemandRows(
+      orders: DataFrame, inventory: DataFrame, products: DataFrame,
+      suppliers: DataFrame, productSuppliers: DataFrame,
+      ordersWhen: Column, inventoryWhen: Column,
+      rankTieBreak: Seq[Column] = Nil,
+      money: DecimalType = DecimalType(10, 2)): DataFrame = {
     val dOrders = dailyOrders(orders, ordersWhen)
     val aggInv = aggregatedInventory(inventory, inventoryWhen)
     val rs = rankedSuppliers(productSuppliers, rankTieBreak)
@@ -172,20 +186,23 @@ object Procurement {
       .filter(col("net_demand") > 0)
       .select("product_id", "product_name", "supplier_id", "supplier_name",
         "net_demand", "unit_cost", "estimated_cost", "supplier_priority")
-      .orderBy(asc("supplier_id"), asc("supplier_priority"),
-        desc("net_demand"))
   }
 
   /** net_demand with the persisted-table schema + calculation_date column
     * (docker/dags/sql/net_demand_insert.sql:38-69,
-    * trino_init_tables_dag.py:82-91). The date is an [[OpaqueLiteral]]:
-    * a plain DATE literal is inlined into the generated Java, so every
-    * day would compile its own copy of this stage's classes.
+    * trino_init_tables_dag.py:82-91). The rows carry no presentation
+    * order: the reference's insert has no ORDER BY (it ends at the
+    * `net_demand > 0` filter), and a table write keeps none, so the
+    * range-sampling job and shuffle of [[netDemand]]'s sort are left out.
+    * The date is an [[OpaqueLiteral]]: a plain DATE literal is inlined
+    * into the generated Java, so every day would compile its own copy of
+    * this stage's classes.
     */
   def netDemandForInsert(orders: DataFrame, inventory: DataFrame,
                          products: DataFrame, suppliers: DataFrame,
                          productSuppliers: DataFrame, d: LocalDate): DataFrame =
-    netDemand(orders, inventory, products, suppliers, productSuppliers, d)
+    netDemandRows(orders, inventory, products, suppliers, productSuppliers,
+      onDate("order_date", d), onDate("snapshot_date", d))
       .withColumn("net_demand", col("net_demand").cast(IntegerType))
       .withColumn("calculation_date",
         OpaqueLiteral.column(java.sql.Date.valueOf(d)))
@@ -242,36 +259,70 @@ object Procurement {
     missingInventory(orders, inventory,
       onDate("order_date", d), onDate("snapshot_date", d))
 
-  /** Q3 — exception records, union of Q1 + Q2 with type/severity tags
-    * (procurement_dag.py:169,179).
+  private val Ordered = 1
+  private val Stocked = 2
+  private val Mapped = 4
+  private val MissingMapping = "MISSING_SUPPLIER_MAPPING"
+
+  /** Q3 — exception records, Q1 ∪ Q2 with type/severity tags
+    * (procurement_dag.py:169,179): a `MISSING_SUPPLIER_MAPPING`/`HIGH` row
+    * per product ordered under `ordersWhen` with no product_suppliers row,
+    * and a `MISSING_INVENTORY`/`MEDIUM` row per such product with no
+    * inventory row under `inventoryWhen`.
+    *
+    * One aggregation answers both checks: the three key sets (the day's
+    * ordered ids, its stocked ids, the mapped ids), each tagged with one
+    * bit and cast to long, are unioned and grouped by `product_id` with
+    * `bit_or(tag)`. An ordered id lacking a mapping, a snapshot or both
+    * expands into one row per missing bit. That is one scan of each input
+    * and one shuffle, with no broadcast; the report only needs product
+    * SETS (the per-product order counts of q05 are not part of it). Null
+    * ids on the stocked and mapped sides are dropped, as they match
+    * nothing in the anti-joins the checks are defined by; a null ordered
+    * id is reported. `product_id` keeps the type of `orders.product_id`.
     */
   def exceptions(orders: DataFrame, inventory: DataFrame,
                  productSuppliers: DataFrame, ordersWhen: Column,
                  inventoryWhen: Column): DataFrame = {
-    // the union only reports product SETS (the per-product order counts of
-    // q05 are not part of the exception record), so each check is an
-    // anti-join of the day's ordered products against a master-data-sized
-    // key set. The branches do NOT share one scan: the optimizer pushes
-    // each anti-join below the distinct, so the two subplans differ and
-    // the executed plan scans `orders` twice, with no ReusedExchange
-    val ordered = orders.filter(ordersWhen).select("product_id").distinct()
-    val q1 = ordered
-      .join(broadcast(productSuppliers.select("product_id").distinct()),
-        Seq("product_id"), "left_anti")
-      .select(lit("MISSING_SUPPLIER_MAPPING").as("type"),
-        lit("HIGH").as("severity"), col("product_id"))
-    val q2 = ordered
-      .join(inventory.filter(inventoryWhen).select("product_id").distinct(),
-        Seq("product_id"), "left_anti")
-      .select(lit("MISSING_INVENTORY").as("type"),
-        lit("MEDIUM").as("severity"), col("product_id"))
-    q1.unionByName(q2)
+    def tagged(ids: DataFrame, tag: Int): DataFrame =
+      ids.select(col("product_id").cast(LongType).as("product_id"),
+        lit(tag).as("tag"))
+    def known(df: DataFrame): DataFrame = df.filter(col("product_id").isNotNull)
+    val missing = col("missing") === Mapped
+    tagged(orders.filter(ordersWhen), Ordered)
+      .unionByName(tagged(known(inventory.filter(inventoryWhen)), Stocked))
+      .unionByName(tagged(known(productSuppliers), Mapped))
+      .groupBy("product_id")
+      .agg(bit_or(col("tag")).as("tags"))
+      .filter(col("tags").isin(Ordered, Ordered | Stocked, Ordered | Mapped))
+      .select(col("product_id"), col("tags"),
+        explode(array(lit(Mapped), lit(Stocked))).as("missing"))
+      .filter((col("tags") bitwiseAND col("missing")) === 0)
+      .select(
+        when(missing, MissingMapping).otherwise("MISSING_INVENTORY")
+          .as("type"),
+        when(missing, "HIGH").otherwise("MEDIUM").as("severity"),
+        col("product_id").cast(orders.schema("product_id").dataType)
+          .as("product_id"))
   }
 
+  /** The day's exception records, computed once and held as a local
+    * relation, sorted mapping rows first, then by `product_id`.
+    * `runDay` counts the set and then writes it to the exception log, so a
+    * lazy frame would run the aggregation twice; this one runs it in one
+    * execution, and counting or collecting it afterwards reads driver
+    * memory. The set is bounded: at most two rows per product ordered that
+    * day, so at most twice the product master, and the exception log
+    * collects it to the driver anyway. The `Column` overload stays lazy.
+    */
   def exceptions(orders: DataFrame, inventory: DataFrame,
-                 productSuppliers: DataFrame, d: LocalDate): DataFrame =
-    exceptions(orders, inventory, productSuppliers,
+                 productSuppliers: DataFrame, d: LocalDate): DataFrame = {
+    val plan = exceptions(orders, inventory, productSuppliers,
       onDate("order_date", d), onDate("snapshot_date", d))
+    val rows = plan.collect().sortBy(r => (r.getString(0) != MissingMapping,
+      Option(r.get(2)).map(_.asInstanceOf[Number].longValue)))
+    plan.sparkSession.createDataFrame(rows.toSeq.asJava, plan.schema)
+  }
 
   // ----------------------------------------------------------------- export
 

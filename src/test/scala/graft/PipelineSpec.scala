@@ -43,33 +43,50 @@ class PipelineSpec extends AnyFunSuite {
     assert(agg.count() == 5)
   }
 
-  test("a steady runDay compiles no generated class: the second of two " +
-    "fixture days reuses every class of the first") {
+  /** The FIXTURES day written twice (the day and the next) as
+    * date-partitioned parquet: the shape the pipeline reads in production
+    * (partition pruning, no date filter left in the scan's stage). */
+  private class TwoDays(name: String) {
     import org.apache.spark.sql.functions.lit
     val p = new ProcurementSpec
-    val tmp = Files.createTempDirectory("graft-pipe-codegen").toString
+    val tmp = Files.createTempDirectory(name).toString
     val d1 = p.d
     val d2 = d1.plusDays(1)
-    // the fixture day twice, as date-partitioned parquet: the shape the
-    // pipeline reads in production (partition pruning, no date filter
-    // left in the scan's stage)
-    def twoDays(df: org.apache.spark.sql.DataFrame, dateCol: String,
-                name: String) = {
+    private def twoDays(df: org.apache.spark.sql.DataFrame, dateCol: String,
+                        name: String) = {
       df.unionByName(df.withColumn(dateCol, lit(java.sql.Date.valueOf(d2))))
         .write.partitionBy(dateCol).parquet(s"$tmp/$name")
       spark.read.parquet(s"$tmp/$name")
     }
     val orders = twoDays(p.orders, "order_date", "orders")
     val inventory = twoDays(p.inventory, "snapshot_date", "inventory")
-    def run(d: LocalDate): Pipeline.Result =
+    def runDay(d: LocalDate): Pipeline.Result =
       Pipeline.runDay(spark, orders, inventory, p.products, p.suppliers,
         p.productSuppliers, Pipeline.Config(
           warehouseDir = s"$tmp/warehouse", outputDir = s"$tmp/output",
           logsDir = s"$tmp/logs", dataDate = d,
           generatedAt = s"${d.plusDays(1)}T00:00:00"))
-    val r1 = run(d1)
+  }
+
+  /** Jobs `body` starts in this session (the suites run one at a time). */
+  private def jobsIn(body: => Unit): Long = {
+    val counters = TaskCounters.register(spark)
+    try {
+      counters.drain()
+      val before = counters.snapshot()
+      body
+      counters.drain()
+      (counters.snapshot() - before).jobs
+    } finally spark.sparkContext.removeSparkListener(counters)
+  }
+
+  test("a steady runDay compiles no generated class: the second of two " +
+    "fixture days reuses every class of the first") {
+    val f = new TwoDays("graft-pipe-codegen")
+    import f._
+    val r1 = runDay(d1)
     val c0 = TaskCounters.compiles
-    val r2 = run(d2)
+    val r2 = runDay(d2)
     val compiles = TaskCounters.compiles - c0
     assert(r2.netDemandRows == r1.netDemandRows)
     assert(r2.exceptionCount == r1.exceptionCount)
@@ -82,6 +99,24 @@ class PipelineSpec extends AnyFunSuite {
     // with Spark's default class cache (100 entries) the day's working
     // set overflows it, and this second day recompiled 116 classes
     assert(compiles == 0, "classes compiled by the second day's runDay")
+  }
+
+  test("a steady runDay's job count: the exception set runs once and the " +
+    "net-demand insert has no sort") {
+    val f = new TwoDays("graft-pipe-jobs")
+    import f._
+    val r1 = runDay(d1)
+    var r2: Pipeline.Result = null
+    val jobs = jobsIn { r2 = runDay(d2) }
+    assert(r2 == r1.copy(exportedFiles = r2.exportedFiles,
+      exceptionLogPath = r2.exceptionLogPath))
+    // exact count in this suite's session; a second run of the exception
+    // plan or a range-sampled sort before the insert each adds jobs
+    assert(jobs == 23, "jobs of the second day's runDay")
+    val exc = graft.operators.Procurement.exceptions(orders, inventory,
+      p.productSuppliers, d2)
+    assert(jobsIn(graft.sources.Sinks.writeExceptionLog(exc, d2.toString,
+      s"$tmp/logs/again")) == 0, "jobs of the exception log's write")
   }
 
   test("backfillAggregates: one ranged scan covers multiple days and " +

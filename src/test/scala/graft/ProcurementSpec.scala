@@ -134,6 +134,85 @@ class ProcurementSpec extends AnyFunSuite {
       ("MISSING_INVENTORY", "MEDIUM", 7)))
   }
 
+  /** Q1 ∪ Q2 as the reference states them: two anti-joins, tagged. */
+  private def taggedUnion(o: DataFrame, inv: DataFrame, ps: DataFrame,
+                          day: LocalDate): Set[(String, String, Any)] =
+    (Procurement.missingSupplierMapping(o, ps, day).collect()
+      .map(r => ("MISSING_SUPPLIER_MAPPING", "HIGH", r.get(0))) ++
+      Procurement.missingInventory(o, inv, day).collect()
+        .map(r => ("MISSING_INVENTORY", "MEDIUM", r.get(0)))).toSet
+
+  private def exceptionSet(df: DataFrame): Set[(String, String, Any)] =
+    df.collect().map(r => (r.getString(0), r.getString(1), r.get(2))).toSet
+
+  test("Q3 exceptions: both overloads equal the tagged union of Q1 and Q2, " +
+    "product_id keeps the orders' type, ids of mixed integer types") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.LongType
+    val sdLit = org.apache.spark.sql.functions.lit(sd)
+    val longOrders = orders.withColumn("product_id",
+      col("product_id").cast(LongType))
+    val longPs = productSuppliers.withColumn("product_id",
+      col("product_id").cast(LongType))
+    // (orders, product_suppliers): the fixture (p7 misses both checks, p3
+    // only inventory), then the two ways the id types can differ
+    for ((o, ps) <- Seq((orders, productSuppliers), (orders, longPs),
+                        (longOrders, productSuppliers))) {
+      val want = taggedUnion(o, inventory, ps, d)
+      assert(want.size == 3)
+      val byDay = Procurement.exceptions(o, inventory, ps, d)
+      val byWhen = Procurement.exceptions(o, inventory, ps,
+        col("order_date") === sdLit, col("snapshot_date") === sdLit)
+      assert(exceptionSet(byDay) == want)
+      assert(exceptionSet(byWhen) == want)
+      for (df <- Seq(byDay, byWhen))
+        assert(df.schema("product_id").dataType ==
+          o.schema("product_id").dataType)
+    }
+  }
+
+  test("Q3 exceptions: the day's set is sorted mapping rows first, then " +
+    "by product_id, and the log keeps that order") {
+    val exc = Procurement.exceptions(orders, inventory, productSuppliers, d)
+    assert(exc.collect().map(r => (r.getString(0), r.getInt(2))).toSeq == Seq(
+      ("MISSING_SUPPLIER_MAPPING", 7), ("MISSING_INVENTORY", 3),
+      ("MISSING_INVENTORY", 7)))
+    val dir = java.nio.file.Files.createTempDirectory("graft-exclog")
+    val log = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      graft.sources.Sinks.writeExceptionLog(exc, d.toString, dir.toString)))
+    assert(log.contains("\"exception_count\": 3"))
+    assert(log.contains("\"exceptions\": [" +
+      "{\"type\": \"MISSING_SUPPLIER_MAPPING\", \"severity\": \"HIGH\", " +
+      "\"product_id\": 7}, " +
+      "{\"type\": \"MISSING_INVENTORY\", \"severity\": \"MEDIUM\", " +
+      "\"product_id\": 3}, " +
+      "{\"type\": \"MISSING_INVENTORY\", \"severity\": \"MEDIUM\", " +
+      "\"product_id\": 7}]"))
+  }
+
+  test("Q3 exceptions: a day with no orders has none, and runDay writes " +
+    "no exception log") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val empty = d.plusDays(3)
+    val el = lit(Date.valueOf(empty))
+    assert(taggedUnion(orders, inventory, productSuppliers, empty).isEmpty)
+    val byDay = Procurement.exceptions(orders, inventory, productSuppliers,
+      empty)
+    assert(byDay.count() == 0)
+    assert(exceptionSet(Procurement.exceptions(orders, inventory,
+      productSuppliers, col("order_date") === el,
+      col("snapshot_date") === el)).isEmpty)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-noorders")
+    val r = graft.Pipeline.runDay(spark, orders, inventory, products,
+      suppliers, productSuppliers, graft.Pipeline.Config(
+        warehouseDir = s"$tmp/warehouse", outputDir = s"$tmp/output",
+        logsDir = s"$tmp/logs", dataDate = empty,
+        generatedAt = s"${empty.plusDays(1)}T00:00:00"))
+    assert(r.exceptionCount == 0)
+    assert(r.exceptionLogPath.isEmpty)
+    assert(!java.nio.file.Files.exists(tmp.resolve("logs")))
+  }
+
   test("A6 export: one doc per supplier, items nested, totals = sum of items") {
     val docs = Procurement.supplierOrders(
       Procurement.netDemand(orders, inventory, products, suppliers,

@@ -37,6 +37,18 @@ class Round19Spec extends AnyFunSuite {
     }
   }
 
+  test("Bench.resultsPath: a relative results name lands under the " +
+    "working directory, an absolute one is kept as it is") {
+    val cwd = java.nio.file.Files.createTempDirectory("r19-cwd")
+    val elsewhere = java.nio.file.Files.createTempDirectory("r19-out")
+      .resolve("BENCH_x.json")
+    assert(Bench.resultsPath(cwd.toString, "bench_results.json") ==
+      cwd.resolve("bench_results.json"))
+    assert(Bench.resultsPath(cwd.toString, "sub/BENCH_sf1.json") ==
+      cwd.resolve("sub").resolve("BENCH_sf1.json"))
+    assert(Bench.resultsPath(cwd.toString, elsewhere.toString) == elsewhere)
+  }
+
   test("regressionCandidates: a reopen_sec override replaces the ratio " +
     "rule — under-threshold bimodal values never flag, over-threshold " +
     "trips even when the generic rule wouldn't") {
