@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+
 /** Plan-inspection utility: prints the formatted physical plan of one
   * registered query (or all) so shuffle count, exchange reuse, pushed
   * filters, and whole-stage-codegen spans can be iterated on without a
@@ -21,38 +23,38 @@ object Explain {
     val sfDir =
       if (rest.length > 1) rest(1) else "/root/testdata/sf0.001"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.tool(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session(cpus, cpus, "ERROR")
     val names =
       if (name == "all") SparkEntry.queries.keys.toSeq.sorted
       else name.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+    import Probe.fmt
+    def explain(qe: QueryExecution): String =
+      qe.explainString(ExplainMode.fromString("formatted"))
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
       println(s"========== $n ==========")
-      if (run) {
-        val t0 = System.nanoTime()
-        df.queryExecution.executedPlan // force analysis+optimization+planning
-        val t1 = System.nanoTime()
-        val rows = df.queryExecution.toRdd.count()
-        val t2 = System.nanoTime()
-        println(f"[$n] rows=$rows plan=${(t1 - t0) / 1e9}%.3f " +
-          f"exec=${(t2 - t1) / 1e9}%.3f (final adaptive plan below)")
-        // a second fresh build shows steady-state planning cost (first
-        // build pays rule-executor warmup)
-        val t3 = System.nanoTime()
-        val df2 = SparkEntry.queries(n)(spark, sfDir)
-        df2.queryExecution.executedPlan
-        val t4 = System.nanoTime()
-        df2.queryExecution.toRdd.count()
-        val t5 = System.nanoTime()
-        println(f"[$n] warm: plan=${(t4 - t3) / 1e9}%.3f " +
-          f"exec=${(t5 - t4) / 1e9}%.3f")
-        df2.queryExecution.tracker.phases.toSeq.sortBy(_._2.startTimeMs)
-          .foreach { case (phase, s) =>
-            println(f"[$n]   phase $phase%-12s ${(s.endTimeMs - s.startTimeMs) / 1e3}%.3f") }
+      if (!run)
+        println(explain(SparkEntry.queries(n)(spark, sfDir).queryExecution))
+      else {
+        var plan = ""
+        val cold =
+          Probe.measure(spark, sfDir, n, inspect = qe => plan = explain(qe))
+        cold.failure.foreach(e => println(s"[$n] FAILED: $e"))
+        if (!cold.failed) {
+          println(s"[$n] rows=${cold.rows} plan=${fmt(cold.planSec)} " +
+            s"exec=${fmt(cold.execSec)} (final adaptive plan below)")
+          // a second fresh build shows steady-state planning cost (first
+          // build pays rule-executor warmup)
+          var phases = Seq.empty[String]
+          val warm = Probe.measure(spark, sfDir, n, inspect = qe =>
+            phases = qe.tracker.phases.toSeq.sortBy(_._2.startTimeMs).map {
+              case (phase, s) => f"[$n]   phase $phase%-12s " +
+                fmt((s.endTimeMs - s.startTimeMs) / 1e3) })
+          println(s"[$n] warm: plan=${fmt(warm.planSec)} " +
+            s"exec=${fmt(warm.execSec)}")
+          phases.foreach(println)
+          println(plan)
+        }
       }
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     }
     spark.stop()
   }

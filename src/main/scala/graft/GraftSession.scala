@@ -176,16 +176,6 @@ object GraftSession {
       spark.sessionState.functionRegistry.registerFunction(
         FunctionIdentifier(name), info(name, cls), builder)
     }
-
-  /** Attach graft's expression-fusion optimizer rules to an existing
-    * session (sessions built through GraftExtensions get them already). */
-  def attachOptimizations(spark: SparkSession): Unit =
-    Seq(graft.plans.SortedIntersectFusion, graft.plans.HofCosineFusion)
-      .foreach { rule =>
-        if (!spark.experimental.extraOptimizations.contains(rule))
-          spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations :+ rule
-      }
 }
 
 /** spark.sql.extensions entry point: injects graft's native functions at
@@ -201,9 +191,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator plans (AsOf.asofJoinExec also attaches this lazily
     // via experimental strategies for sessions built without extensions)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // expression fusion (size∘array_intersect over sorted shingle hashes
-    // → merge-scan kernel; HOF cosine → fused CosineSimilarity kernel)
-    e.injectOptimizerRule(_ => graft.plans.SortedIntersectFusion)
-    e.injectOptimizerRule(_ => graft.plans.HofCosineFusion)
   }
 }

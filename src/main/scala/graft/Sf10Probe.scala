@@ -5,8 +5,9 @@ package graft
   * data, built by [[ScaleUp]] with n=100), written as a committed JSON
   * artifact (`BENCH_sf10_subset.json`).
   *
-  * This deliberately reuses none of [[Bench]]'s suite machinery
-  * (calibration, standing-memo release, canary): the probe's question
+  * It shares [[Bench]]'s measurement core ([[Probe]]: session, barrier,
+  * timed run, calibration) but none of its suite policy (passes,
+  * standing-memo release, canary): the probe's question
   * is not "did this round regress" but "does each scale-critical
   * operator's cost stay ~linear from 10× to 100×" — one cold pass per
   * query (memo builds included, noted per query in PLANS.md) against a
@@ -16,9 +17,10 @@ package graft
   *
   * Usage: runMain graft.Sf10Probe [query ...]  (default: the audited
   * scale-sensitive tier). Env: SPARK_GRAFT_SF_DIR (default
-  * target/sf10), SPARK_GRAFT_CPUS, SF10_BUDGET_SEC (default 300,
-  * per query), SPARK_GRAFT_RESULTS_FILE (default
-  * BENCH_sf10_subset.json).
+  * target/sf10), SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE (default 4×cpus),
+  * SF10_BUDGET_SEC (default 300, per query), SPARK_GRAFT_RESULTS_FILE
+  * (default BENCH_sf10_subset.json; a relative name lands under the
+  * working directory, an absolute one where it names).
   */
 object Sf10Probe {
 
@@ -69,11 +71,17 @@ object Sf10Probe {
     * frame-hash memo billed to the query — the same disease, same cure).
     * The per-query budget applies to the WARM number for these; the
     * cold number carries the build and is gated against the separate
-    * `SF10_BUILD_BUDGET_SEC` so an unbounded build regression still
-    * fails the probe instead of riding the warm exemption. */
+    * [[BuildBudgetSec]] so an unbounded build regression still fails the
+    * probe instead of riding the warm exemption. */
   val WarmSplit: Set[String] =
     Set("q137_hnsw_ann", "q162_audio_fingerprint",
       "q164_video_frame_hashes")
+
+  /** Budget for the cold rows of [[WarmSplit]] queries, which carry a
+    * one-time standing build (amortized over every probe in production):
+    * generous, but GATED — exempting them entirely would let a build
+    * regression (16 s → 2000 s) pass the probe silently. */
+  val BuildBudgetSec = 600.0
 
   /** The artifact's headline `value`: cold rows only. `_warm` re-runs
     * are diagnostic splits, not additional tier members — summing them
@@ -99,27 +107,11 @@ object Sf10Probe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf10")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val budget = sys.env.getOrElse("SF10_BUDGET_SEC", "300").toDouble
-    // Cold rows of WarmSplit queries carry a one-time standing build
-    // (amortized over every probe in production) — generous, but GATED:
-    // exempting them entirely would let a build regression (16 s →
-    // 2000 s) pass the probe silently.
-    val buildBudget =
-      sys.env.getOrElse("SF10_BUILD_BUDGET_SEC", "600").toDouble
     val outName = sys.env
       .getOrElse("SPARK_GRAFT_RESULTS_FILE", "BENCH_sf10_subset.json")
     val names = if (args.nonEmpty) args.toSeq else DefaultTier
-    // Shuffle partitions scale with the data, not the core count: at
-    // 100× sf0.1 a 32-partition shuffle holds ~500 MB+ per partition
-    // on the wide joins and spills — on a real cluster
-    // maxPartitionBytes + AQE coalescing do this sizing; in a
-    // fixed-core probe the config has to (AQE merges small partitions
-    // but never splits an oversized non-skew-join partition).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      (cpus * 4).toString)
-    val spark = GraftSession.tool(cpus)
-      .config("spark.sql.shuffle.partitions", shuffle).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.quietBoundedWindowWarnings()
+    // shuffle width scales with the data (see Probe.session): 4×cpus
+    val spark = Probe.session(cpus, cpus * 4)
     // Contention telemetry (r18): the r17 probe's two over-budget rows
     // (q185 651 s, q210 523 s) were suspected in-suite inflation — the
     // isolated re-measure REPRODUCED them (624/291 s) on a box whose
@@ -128,40 +120,25 @@ object Sf10Probe {
     // artifact cannot distinguish "operator regressed 2×" from "box is
     // 2× contended today"; with them the comparison is machine-readable
     // (the Bench discipline since r8, adopted here).
-    val calibStart = Bench.fixedLoadCalib(spark, cpus)
-
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    def fmt(v: Double): String =
-      "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def timedRun(name: String, label: String): (String, Double) = {
-      // Double-gc drain barrier (see Bench.gcBarrier): at sf10 a
-      // predecessor's shuffle files only delete once its RDDs are
-      // collected, and GBs of undeleted shuffle tree squeeze the page
-      // cache under the next window — the r16 probe measured q78 at
-      // 149 s in-suite vs 44 s isolated with zero code difference.
-      // 2×(gc + 500 ms) per query is noise against 300 s budgets.
-      System.gc(); Thread.sleep(500)
-      System.gc(); Thread.sleep(500)
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.toRdd.count()
-      catch { case e: Throwable =>
-        failed += label
-        System.err.println(s"[sf10] $label FAILED: ${e.getMessage}")
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(s"[sf10] $label ${fmt(sec)}s")
-      label -> sec
+    val calibStart = Probe.fixedLoadCalib(spark, cpus)
+    // Each window opens behind a 1 s barrier (2×(gc + 500 ms), noise
+    // against 300 s budgets). A WarmSplit query runs twice: the second
+    // run separates the one-time build (billed to the cold row) from
+    // the probe.
+    val runs = names.flatMap { name =>
+      (if (WarmSplit(name)) Seq(name, s"${name}_warm") else Seq(name))
+        .map { label =>
+          val r = Probe.measure(spark, sfDir, name, barrierMs = 1000)
+          r.failure.foreach(e =>
+            System.err.println(s"[sf10] $label FAILED: ${e.getMessage}"))
+          System.err.println(s"[sf10] $label ${Probe.fmt(r.sec)}s")
+          (label, r.sec, r.failed)
+        }
     }
-    val results = names.flatMap { name =>
-      val cold = timedRun(name, name)
-      // warm split: a second run of standing-index queries separates
-      // the one-time build (billed to the cold row) from the probe
-      if (WarmSplit(name)) Seq(cold, timedRun(name, s"${name}_warm"))
-      else Seq(cold)
-    }
-    val calibEnd = Bench.fixedLoadCalib(spark, cpus)
+    val calibEnd = Probe.fixedLoadCalib(spark, cpus)
     spark.stop()
+    val results = runs.map(r => r._1 -> r._2)
+    val failed = runs.filter(_._3).map(_._1)
     // Per-query budget overrides ride BASELINE_REBASES.json (entries
     // with "baseline":"BENCH_sf10_subset.json" and a "budget_sec" —
     // same provenance discipline as timing rebases: query, evidence,
@@ -169,55 +146,37 @@ object Sf10Probe {
     // honest sf10 cost is 293–332 s (r16 audit, PLANS.md) against the
     // generic 300 s, and the r17 width experiment measurably REGRESSED
     // it — the uniform budget is re-based for that query rather than
-    // hand-waved over every sweep.
-    // shared with Bench; structurally validated before the scan, so a
-    // malformed rebase file fails the probe loudly instead of silently
-    // dropping its budget overrides. Keyed to the canonical artifact
-    // name (not outName) so diagnostic SPARK_GRAFT_RESULTS_FILE runs
-    // judge against the same budgets the committed artifact does.
-    val budgetOverrides: Map[String, Double] =
-      Bench.budgetOverrides(sys.props("user.dir"), "BENCH_sf10_subset.json")
-    // budget: WarmSplit queries are judged on their warm row against
-    // the per-query budget; their cold row (the one-time standing
-    // build, documented per query in PLANS.md) is judged against the
-    // separate build budget. Overrides keyed to either label win.
+    // hand-waved over every sweep. Keyed to the canonical artifact name
+    // (not outName) so diagnostic SPARK_GRAFT_RESULTS_FILE runs judge
+    // against the same budgets, and the same calib gate, the committed
+    // artifact does.
+    val cwd = sys.props("user.dir")
+    val budgetOverrides = Bench.budgetOverrides(cwd, "BENCH_sf10_subset.json")
     val over = results
       .filter { case (k, v) =>
-        v > budgetFor(k, budgetOverrides, budget, buildBudget) }
+        v > budgetFor(k, budgetOverrides, budget, BuildBudgetSec) }
       .filterNot(r => failed.contains(r._1))
-    val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" + (if (failed.contains(k)) "-1" else fmt(v))
-    }.mkString("{", ",", "}")
-    // Calib gate (r19, shared discipline with Bench): the probe's own
-    // emissions are judged against the recorded quiet steady state too —
-    // a probe artifact whose calib ends past the gate self-marks
-    // non-canonical (the r17 probe's q185/q210 "suspect" rows were
-    // exactly this: honest timings on a 5-8× contended box).
-    val calibSteady =
-      Bench.calibSteadySec(sys.props("user.dir"), "BENCH_sf10_subset.json")
-    val canonical = calibSteady
-      .forall(s => calibEnd <= Bench.CalibGateMaxRatio * s)
-    val line =
-      s"""{"metric":"sf10_subset","value":${fmt(headlineValue(results))},""" +
-        s""""unit":"sec","sf":"$sfDir","n_queries":${results.size},""" +
-        s""""headline_excludes_warm":true,""" +
-        s""""queries":$qs,"budget_sec":$budget,""" +
-        s""""build_budget_sec":$buildBudget,""" +
-        s""""calib_start":${fmt(calibStart)},"calib_end":${fmt(calibEnd)},""" +
-        s""""calib_steady_sec":${calibSteady.map(fmt).getOrElse("null")},""" +
-        s""""calib_end_vs_steady":${calibSteady
-          .collect { case s if s > 0 => fmt(calibEnd / s) }
-          .getOrElse("null")},""" +
-        s""""canonical":$canonical,""" +
-        s""""n_over_budget":${over.size},""" +
-        s""""over_budget":${over.map(o => "\"" + o._1 + "\":" + fmt(o._2))
-          .mkString("{", ",", "}")},""" +
-        s""""failed":[${failed.map("\"" + _ + "\"").mkString(",")}]}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.props("user.dir"), outName), line + "\n")
-    // Per-query map as its own stdout line first (r19 verdict task 1,
-    // same discipline as Bench.queriesLine): the main artifact line
-    // below stays last so a tail-window parser still finds it.
+    // Calib gate (r19, shared with Bench): a probe artifact whose calib
+    // ends past the gate self-marks non-canonical (the r17 probe's
+    // q185/q210 "suspect" rows were exactly this: honest timings on a
+    // 5-8× contended box).
+    val gate = Probe.calibGate(
+      Bench.calibSteadySec(cwd, "BENCH_sf10_subset.json"), calibEnd)
+    val line = Probe.obj("metric" -> "sf10_subset",
+      "value" -> headlineValue(results), "unit" -> "sec", "sf" -> sfDir,
+      "n_queries" -> results.size, "headline_excludes_warm" -> true,
+      "queries" -> Probe.obj(results.map { case (k, v) =>
+        k -> (if (failed.contains(k)) -1 else v) }: _*),
+      "budget_sec" -> budget, "build_budget_sec" -> BuildBudgetSec,
+      "calib_start" -> calibStart, "calib_end" -> calibEnd,
+      "calib_steady_sec" -> gate.steadySec,
+      "calib_end_vs_steady" -> gate.endVsSteady,
+      "canonical" -> gate.canonical, "n_over_budget" -> over.size,
+      "over_budget" -> Probe.obj(over: _*), "failed" -> Probe.arr(failed))
+    Probe.writeArtifact(outName, line.text)
+    // Per-query map as its own stdout line first (same discipline as
+    // Bench.queriesLine): the main artifact line below stays last so a
+    // tail-window parser still finds it.
     println(Bench.queriesLine(results.map { case (k, v) =>
       k -> (if (failed.contains(k)) -1.0 else v) }))
     println(line)

@@ -7,12 +7,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** One reading of [[TaskCounters]]; `b - a` is what ran in between. */
+/** One reading of [[TaskCounters]]; `b - a` is what ran in between, and
+  * `+` adds two such deltas. */
 final case class TaskCounts(shuffleRead: Long, shuffleWrite: Long,
     spill: Long, jobs: Long, stages: Long, tasks: Long, compiles: Long) {
   def -(o: TaskCounts): TaskCounts = TaskCounts(shuffleRead - o.shuffleRead,
     shuffleWrite - o.shuffleWrite, spill - o.spill, jobs - o.jobs,
     stages - o.stages, tasks - o.tasks, compiles - o.compiles)
+  def +(o: TaskCounts): TaskCounts = TaskCounts(shuffleRead + o.shuffleRead,
+    shuffleWrite + o.shuffleWrite, spill + o.spill, jobs + o.jobs,
+    stages + o.stages, tasks + o.tasks, compiles + o.compiles)
 }
 
 /** Cumulative data movement (shuffle read/write, memory + disk spill) and

@@ -213,31 +213,21 @@ object Procurement {
 
   /** Q1/J5 — MISSING_SUPPLIER_MAPPING (docker/dags/procurement_dag.py:161-169):
     * products ordered on `d` that have no product_suppliers row.
-    * Anti-join keeps the fact partitioned; the dim side broadcasts.
+    * Anti-join keeps the fact partitioned. The anti-join only tests key
+    * EXISTENCE, so the build side collapses to DISTINCT product_ids —
+    * products-master cardinality, which the reference keeps in a
+    * Postgres master table (inherently bounded) — and those keys are
+    * broadcast-hinted: AQE otherwise judges the build side by the FULL
+    * mapping's stage stats (the distinct fuses into the dim's stage) and
+    * flips to a fact-shuffling sort-merge join.
     */
   def missingSupplierMapping(orders: DataFrame, productSuppliers: DataFrame,
                              when: Column): DataFrame =
-    missingSupplierMapping(orders, productSuppliers, when,
-      broadcastKeys = true)
-
-  /** @param broadcastKeys the anti-join only tests key EXISTENCE, so the
-    *   build side collapses to DISTINCT product_ids — products-master
-    *   cardinality, which the reference keeps in a Postgres master table
-    *   (inherently bounded). With `true` (default) those keys are
-    *   broadcast-hinted: AQE otherwise judges the build side by the FULL
-    *   mapping's stage stats (the distinct fuses into the dim's stage)
-    *   and flips to a fact-shuffling sort-merge join. Deployments whose
-    *   distinct key set genuinely outgrows a broadcast (billions of
-    *   products) pass `false` and get the shuffled anti-join. */
-  def missingSupplierMapping(orders: DataFrame, productSuppliers: DataFrame,
-                             when: Column, broadcastKeys: Boolean): DataFrame = {
-    val keys = productSuppliers.select("product_id").distinct()
     orders.filter(when)
-      .join(if (broadcastKeys) broadcast(keys) else keys,
+      .join(broadcast(productSuppliers.select("product_id").distinct()),
         Seq("product_id"), "left_anti")
       .groupBy("product_id")
       .agg(count(lit(1)).as("order_count"))
-  }
 
   def missingSupplierMapping(orders: DataFrame, productSuppliers: DataFrame,
                              d: LocalDate): DataFrame =

@@ -29,16 +29,29 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }
 
-  test("every entry point builds its session through GraftSession") {
+  /** src/main source files whose text contains `s`, by file name. */
+  private def mainFilesContaining(s: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val builders = try walk.iterator.asScala
+    try walk.iterator.asScala
       .filter(p => p.toString.endsWith(".scala") &&
-        java.nio.file.Files.readString(p).contains("SparkSession.builder("))
+        java.nio.file.Files.readString(p).contains(s))
       .map(_.getFileName.toString).toSeq.sorted
     finally walk.close()
+  }
+
+  test("every entry point builds its session through GraftSession") {
+    val builders = mainFilesContaining("SparkSession.builder(")
     assert(builders == Seq("GraftSession.scala"),
       s"SparkSession.builder( outside GraftSession: $builders")
+  }
+
+  test("only graft.Probe opens a gc barrier or materializes a measured " +
+    "query") {
+    val sites = Seq("System.gc(", ".queryExecution.toRdd.count()")
+      .map(call => call -> mainFilesContaining(call))
+    assert(sites.forall(_._2 == Seq("Probe.scala")),
+      s"measurement outside Probe: $sites")
   }
 
   test("DESCRIBE FUNCTION reports each kernel's real implementing class") {

@@ -49,6 +49,18 @@ class Round19Spec extends AnyFunSuite {
     assert(Bench.resultsPath(cwd.toString, elsewhere.toString) == elsewhere)
   }
 
+  test("Probe.writeArtifact: Bench's and Sf10Probe's results file " +
+    "lands where an absolute SPARK_GRAFT_RESULTS_FILE names, not under " +
+    "the working directory") {
+    val out = java.nio.file.Files.createTempDirectory("r19-abs")
+      .resolve("BENCH_sf10_subset.json")
+    val written = Probe.writeArtifact(out.toString, "{}")
+    assert(written == out)
+    assert(java.nio.file.Files.readString(out) == "{}\n")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
+      sys.props("user.dir"), out.toString)))
+  }
+
   test("regressionCandidates: a reopen_sec override replaces the ratio " +
     "rule — under-threshold bimodal values never flag, over-threshold " +
     "trips even when the generic rule wouldn't") {
@@ -100,9 +112,13 @@ class Round19Spec extends AnyFunSuite {
     val steady = 0.063
     // the r18 official artifact's calib_end (0.133 = 2.11x steady)
     // must NOT have been minted as a canary baseline
-    assert(0.133 > Bench.CalibGateMaxRatio * steady)
+    assert(0.133 > Probe.CalibGateMaxRatio * steady)
+    assert(!Probe.calibGate(Some(steady), 0.133).canonical)
     // the r17 committed run's steady-state end passes
-    assert(0.063 <= Bench.CalibGateMaxRatio * steady)
+    assert(0.063 <= Probe.CalibGateMaxRatio * steady)
+    assert(Probe.calibGate(Some(steady), 0.063).canonical)
+    // no recorded steady state: the gate cannot judge, the run counts
+    assert(Probe.calibGate(None, 9.9) == Probe.CalibGate(None, None, true))
   }
 
   test("ShuffleWidth double-census precision margin (r18 advice item, " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native expression surface exposed to SQL users via
@@ -8,18 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SqlFunctionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** Runs `body` on a fresh session with the fusion rules attached. All
-    * suites share TestSpark.spark in one JVM, so attaching them there would
-    * leak them into every suite that runs later. */
-  private def withFusion(body: SparkSession => Unit): Unit = {
-    val before = spark.experimental.extraOptimizations
-    val fused = spark.newSession()
-    GraftSession.attachOptimizations(fused)
-    body(fused)
-    assert(spark.experimental.extraOptimizations == before,
-      "fusion rules leaked into the shared TestSpark session")
-  }
 
   test("cosine_similarity callable from SQL; codegen and eval agree") {
     GraftSession.registerFunctions(spark)
@@ -83,42 +70,12 @@ class SqlFunctionSpec extends AnyFunSuite {
     assert(hh == Seq(("a", 3L), ("b", 2L), ("c", 1L)))
   }
 
-  test("optimizer fusion rewrites size(array_intersect) over shingle " +
-    "hashes into the merge-scan kernel") { withFusion { fusedSpark =>
+  test("native cosine is bit-equal to the HOF fold on equal-length, " +
+    "null-free rows") {
     import org.apache.spark.sql.functions._
-    // parquet-backed source: a literal input would be constant-folded to
-    // a LocalRelation before the fused expression could be observed
-    val docs = fusedSpark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    val fused = docs.select($"doc_id", size(array_intersect(
-      graft.functions.Dedup.shingleHashesFast($"text", 3),
-      graft.functions.Dedup.shingleHashesFast(reverse($"text"), 3))).as("n"))
-    assert(fused.queryExecution.optimizedPlan.toString
-      .contains("sorted_intersect_count"))
-    // values identical to the unfused formulation
-    val unfusedSpark = TestSpark.spark.newSession()
-    val docs2 = unfusedSpark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    import org.apache.spark.sql.{functions => F}
-    val unfused = docs2.select(F.col("doc_id"),
-      F.size(F.array_intersect(
-        graft.functions.Dedup.shingleHashesFast(F.col("text"), 3),
-        graft.functions.Dedup.shingleHashesFast(F.reverse(F.col("text")), 3)))
-        .as("n"))
-    assert(!unfused.queryExecution.optimizedPlan.toString
-      .contains("sorted_intersect_count"))
-    def m(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(m(fused) == m(unfused))
-  }}
-
-  test("optimizer fusion rewrites the HOF cosine formulation into the " +
-    "fused kernel; values identical incl. unequal-length and null-element " +
-    "NULL rows") { withFusion { fusedSpark =>
-    import org.apache.spark.sql.functions._
-    // parquet-backed (a literal frame would be folded to a LocalRelation
-    // before the fusion could be observed); row 4's unequal lengths and
-    // row 5's null element both hit the rewrite's NULL branch
+    import graft.functions.Similarity
+    // parquet-backed, so both forms run over scanned rows rather than
+    // being constant-folded on the driver
     val path = java.nio.file.Files
       .createTempDirectory("graft-hofcos").toString + "/vecs"
     spark.sql(
@@ -126,47 +83,19 @@ class SqlFunctionSpec extends AnyFunSuite {
         |  (1L, array(1.0d, 2.0d, 3.0d), array(1.0d, 2.0d, 3.0d)),
         |  (2L, array(1.0d, 0.0d, 0.0d), array(0.0d, 1.0d, 0.0d)),
         |  (3L, array(0.5d, -2.0d, 4.0d), array(3.0d, 0.25d, -1.0d)),
-        |  (4L, array(1.0d, 2.0d), array(1.0d, 2.0d, 3.0d)),
-        |  (5L, array(1.0d, CAST(NULL AS DOUBLE), 2.0d),
-        |       array(1.0d, 1.0d, 1.0d))
+        |  (4L, array(0.1d, 0.7d, 1e-3d, 9.5d), array(2.2d, -0.3d, 5.0d, 0.01d))
         |AS t(id, a, b)""".stripMargin).write.parquet(path)
-
-    def hofCosine(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("id"), graft.functions.Similarity
-        .cosineHof(col("a"), col("b")).as("sim"))
-
-    val fused = hofCosine(fusedSpark.read.parquet(path))
-    assert(fused.queryExecution.optimizedPlan.toString
-      .contains("cosine_similarity"))
-
-    val plainSession = TestSpark.spark.newSession()
-    val unfused = hofCosine(plainSession.read.parquet(path))
-    assert(!unfused.queryExecution.optimizedPlan.toString
-      .contains("cosine_similarity"))
-
-    def m(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-        .toMap
-    val (f, u) = (m(fused), m(unfused))
-    assert(f == u, s"$f vs $u")
-    assert(f(4L).isEmpty)       // unequal lengths → NULL, both forms
-    assert(f(5L).isEmpty)       // null element → NULL, both forms
-    assert(f(1L).contains(1.0)) // bit-equal, not approximate
-  }}
-
-  test("HOF cosine fusion does NOT fire on non-double (float) arrays") {
-    withFusion { fusedSpark =>
-    import org.apache.spark.sql.functions._
-    val emb = fusedSpark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet").limit(10)
-    // float arrays: the HOF form multiplies floats (different rounding
-    // than the all-double kernel), so the rule must leave them alone
-    val p = emb.select(graft.functions.Similarity
-      .cosineHof(col("embedding"), col("embedding")).as("sim"))
-      .queryExecution.optimizedPlan.toString
-    assert(!p.contains("cosine_similarity"), p.take(1500))
-  }}
+    val rows = spark.read.parquet(path).select(col("id"),
+      Similarity.cosine(col("a"), col("b")).as("native"),
+      Similarity.cosineHof(col("a"), col("b")).as("hof")).collect()
+    assert(rows.length == 4)
+    rows.foreach { r =>
+      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+        s"row ${r.getLong(0)}: ${r.getDouble(1)} vs ${r.getDouble(2)}")
+    }
+    assert(rows.find(_.getLong(0) == 1L).get.getDouble(1) == 1.0)
+  }
 
   test("aggregate and census kernels callable from SQL") {
     import org.apache.spark.sql.functions._
